@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{withConf, withRocksDb}
+import graft.Verify.{cause, jsonStr}
 import graft.io.Tables
 import graft.streaming.{KeyedEvent, Replay, StateMachines}
 
@@ -54,7 +56,9 @@ import graft.streaming.{KeyedEvent, Replay, StateMachines}
   * by `SPARK_GRAFT_BENCH_OUT` (default `bench_out.json` in the cwd) —
   * sbt wraps stdout in `[info]` prefixes that broke the driver's parser
   * in round 1. `failed` counts queries that errored in either pass;
-  * their per-query value is -1 and they are excluded from totals.
+  * their per-query value is -1 and they are excluded from totals, and
+  * `errors` maps each to its cause (`ExceptionClass: message`); a failed
+  * stream entry carries its cause as `error`.
   *
   * Deadline discipline (round 14 — the r13 driver bench died rc=124 on a
   * ~4×-contended host with NOTHING on the record because the only write
@@ -86,23 +90,17 @@ object Bench {
     budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "3300").toDouble
     outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val errors = scala.collection.mutable.Map.empty[String, String] // name -> cause
     def runOne(name: String): Double = {
       val t0 = System.nanoTime()
       val ok =
         try {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save(); true
-        } catch { case _: Throwable => false }
+        } catch { case e: Throwable => errors(name) = cause(e); false }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       // centralized cache lifecycle: a query's internal persist()s (pair
       // frames, shingle frames) are scoped to that query — freeing them
@@ -175,7 +173,9 @@ object Bench {
       // failure nulls the headline value (per-query numbers stay reported)
       val value = if (failed > 0) "null" else total.toString
       val steadyTotals = totals.reverse.mkString("[", ",", "]")
-      s"""{"metric":"total","value":$value,"unit":"sec","protocol":"per-query min across ${perPass.size} timed passes","queries":${jsonMap(results)},"passes":$passesJson,"sf":"$sfDir","mode":"$mode","cold_sec":$coldSec,"failed":$failed,"steady_totals":$steadyTotals,"stable":$stable,"totals_agree":$totalsAgree,"spread_flagged":$spreadFlagged,"spread_basis":${spreads.size},"budget_sec":$budgetSec,"elapsed_sec":${"%.1f".format(elapsedSec)},"deadline_cut":$deadlineCut,"loadavg_start":$loadavgStart,"loadavg":$loadavgNow,"stream":$streamJson,"skipped_stream_replays":$skipped}"""
+      val errorsJson = names.flatMap(n => errors.get(n).map(e => jsonStr(n) + ":" + jsonStr(e)))
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":$value,"unit":"sec","protocol":"per-query min across ${perPass.size} timed passes","queries":${jsonMap(results)},"errors":$errorsJson,"passes":$passesJson,"sf":"$sfDir","mode":"$mode","cold_sec":$coldSec,"failed":$failed,"steady_totals":$steadyTotals,"stable":$stable,"totals_agree":$totalsAgree,"spread_flagged":$spreadFlagged,"spread_basis":${spreads.size},"budget_sec":$budgetSec,"elapsed_sec":${"%.1f".format(elapsedSec)},"deadline_cut":$deadlineCut,"loadavg_start":$loadavgStart,"loadavg":$loadavgNow,"stream":$streamJson,"skipped_stream_replays":$skipped}"""
     }
 
     writeRecord(assemble("{\"status\":\"pending\"}", "partial-batch"))
@@ -247,12 +247,8 @@ object Bench {
         prep.replay(pipeline).count()
       }
     def oneRocksDb(name: String)(
-        pipeline: org.apache.spark.sql.Dataset[KeyedEvent] => DataFrame): String = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try one(name)(pipeline) finally spark.conf.unset(key)
-    }
+        pipeline: org.apache.spark.sql.Dataset[KeyedEvent] => DataFrame): String =
+      withRocksDb(spark)(one(name)(pipeline))
     // the ingestGate partition-sweep treatment applied to the one machine
     // still flagged perf-weak: at replay grain (~26 micro-batches over
     // 100k events) windowTopN's TWO stateful stages pay per-partition
@@ -263,20 +259,13 @@ object Bench {
     // hash-proves it per replay), and the sweep row discloses the knob
     // via "state_partitions" exactly like the ingest rows.
     def oneAt(name: String, parts: Int, rocksDb: Boolean = false)(
-        pipeline: org.apache.spark.sql.Dataset[KeyedEvent] => DataFrame): String = {
-      val partsKey = "spark.sql.shuffle.partitions"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.get(partsKey)
-      spark.conf.set(partsKey, parts)
-      if (rocksDb) spark.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamEntry(name, nRows, s""","state_partitions":$parts""") {
-        prep.replay(pipeline).count()
-      } finally {
-        spark.conf.set(partsKey, prev)
-        if (rocksDb) spark.conf.unset(provKey)
+        pipeline: org.apache.spark.sql.Dataset[KeyedEvent] => DataFrame): String =
+      withConf(spark, Seq("spark.sql.shuffle.partitions" -> parts) ++
+          Option.when(rocksDb)(GraftSession.rocksDbState): _*) {
+        streamEntry(name, nRows, s""","state_partitions":$parts""") {
+          prep.replay(pipeline).count()
+        }
       }
-    }
     try Seq(
       one("windowTopN")(s =>
         StateMachines.windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
@@ -351,12 +340,14 @@ object Bench {
     // at least one pass always runs so a reached entry is never empty
     if (overBudget)
       return s""""$name":{"skipped":"deadline","elapsed_sec":${"%.1f".format(elapsedSec)}}"""
+    var error = "" // cause of the latest failed pass
     def onePass(): Double = {
       val t0 = System.nanoTime()
       try { replay; (System.nanoTime() - t0) / 1e9 }
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] stream $name failed: $e")
+          error = cause(e)
           -1.0
       }
     }
@@ -375,7 +366,7 @@ object Bench {
     }
     val passesJson = times.map(t => f"$t%.2f").mkString("[", ",", "]")
     if (times.exists(_ < 0))
-      s""""$name":{"rows":$nRows,"sec":-1,"rows_per_sec":-1,"passes":$passesJson$extraJson}"""
+      s""""$name":{"rows":$nRows,"sec":-1,"rows_per_sec":-1,"passes":$passesJson,"error":${jsonStr(error)}$extraJson}"""
     else {
       val best = times.min
       val spread = times.max / best
@@ -393,11 +384,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     val docs = Tables(spark, sfDir).documents
     val nRows = docs.count()
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val defaultParts = spark.conf.get(partsKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions")
     def docEvents(d: org.apache.spark.sql.DataFrame) = d.select(
       lit("").as("key"),
       timestamp_seconds(col("doc_id")).as("ts"),
@@ -415,18 +402,17 @@ object Bench {
     val prep4x = Replay.prepareDocs(docEvents(docs4x), nChunks = 4)
     val clogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     def pass(label: String, parts: Int, sigParts: Int = 0, changelog: Boolean = false,
-        p: Replay.Prepared[graft.streaming.DocEvent] = prep, n: Long = nRows): String = {
-      spark.conf.set(partsKey, parts)
-      spark.conf.set(clogKey, changelog)
-      try streamEntry(label, n,
-        s""","state_partitions":$parts,"sig_partitions":${if (sigParts > 0) sigParts else parts},"changelog_ckpt":$changelog""") {
-        p.replay { stream =>
-          graft.streaming.StreamingDedup
-            .ingestGate(stream.toDF(), sigPartitions = sigParts).toDF()
-        }.count()
-      } finally spark.conf.unset(clogKey)
-    }
-    try {
+        p: Replay.Prepared[graft.streaming.DocEvent] = prep, n: Long = nRows): String =
+      withConf(spark, "spark.sql.shuffle.partitions" -> parts, clogKey -> changelog) {
+        streamEntry(label, n,
+          s""","state_partitions":$parts,"sig_partitions":${if (sigParts > 0) sigParts else parts},"changelog_ckpt":$changelog""") {
+          p.replay { stream =>
+            graft.streaming.StreamingDedup
+              .ingestGate(stream.toDF(), sigPartitions = sigParts).toDF()
+          }.count()
+        }
+      }
+    try withRocksDb(spark) {
       // three disclosed rows: the session default (32 — what every other
       // stream row runs at) and two state-partition counts sized to the
       // BATCH, not the box. At this batch size the pipeline is RocksDB
@@ -459,8 +445,6 @@ object Bench {
         pass("ingestGate_4x", 4, sigParts = 32, changelog = true,
           p = prep4x, n = nRows * 4)).mkString(",")
     } finally {
-      spark.conf.unset(key)
-      spark.conf.set(partsKey, defaultParts)
       prep.close()
       prep4x.close()
     }

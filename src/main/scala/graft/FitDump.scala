@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates `FittedArtifacts.scala` — the gate-scale (sf0.01) fitted
@@ -37,11 +36,9 @@ object FitDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    // a fixed width, not the host's: the artifacts are generated alike anywhere
+    val spark = GraftSession.builder("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val t = graft.io.Tables(spark, sfDir)

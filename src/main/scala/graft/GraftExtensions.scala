@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.{AdcScore, AudioMeta, CharNgrams, CharStats, C
   * uses: `SELECT cosine_sim(a.vec, b.vec)`, `SELECT image_meta(payload).*`.
   * Installed by [[GraftSession.builder]]; also usable standalone via
   * `--conf spark.sql.extensions=...` semantics by passing this object to
-  * `SparkSession.builder.withExtensions`.
+  * a session builder's `withExtensions`.
   *
   * Only model-free scalar expressions register: `PqCodes` /
   * `SignProjectionBucket` carry plan-time model artifacts (codebooks,

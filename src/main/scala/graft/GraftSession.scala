@@ -2,29 +2,35 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard config.
+/** The one place a session is built or a session setting is scoped.
   *
-  * Local-mode defaults sized for the test harness (local[32], 32 shuffle
-  * partitions); on a real cluster the same code runs unchanged — AQE
+  * Local-mode defaults: `local[cpus]` with `cpus` shuffle partitions, where
+  * `cpus` is `SPARK_GRAFT_CPUS` (default 32). A caller that passes its own
+  * master and sets `spark.sql.shuffle.partitions` after the builder gets
+  * exactly those. On a real cluster the same code runs unchanged — AQE
   * coalesces/splits shuffle partitions at runtime, so the static
   * `spark.sql.shuffle.partitions` is only a starting hint.
   */
 object GraftSession {
 
-  /** @param rocksdbStateStore use RocksDB-backed streaming state
-    *   (spills to local disk; the right provider once keyed state exceeds
-    *   executor heap — SURVEY §4). Default stays the in-memory HDFS-backed
-    *   provider, which is faster for small state.
-    */
-  def builder(
-      master: String = "local[32]",
-      rocksdbStateStore: Boolean = false): SparkSession.Builder = {
-    val b = SparkSession
+  private val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The RocksDB state-store provider setting: spills keyed state to local
+    * disk (the right provider once state exceeds executor heap — SURVEY
+    * §4) and the only one `transformWithState` accepts. The session
+    * default stays the in-memory HDFS-backed provider, which is faster for
+    * small state. */
+  val rocksDbState: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(master)
       .appName("graft")
       .withExtensions(GraftExtensions) // SQL names for the native expressions
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -33,16 +39,23 @@ object GraftSession {
       // reliable checkpoint() files (the CC loop writes one per round) are
       // deleted once their RDD is GC'd instead of accumulating forever
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    if (rocksdbStateStore)
-      b.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else b
+
+  /** Runs `body` with `confs` set on `spark`, then puts every key back as
+    * it was — the previous value, or unset — also when `body` throws.
+    * Eager bodies only: a lazy frame returned from `body` is planned after
+    * the scope has closed. */
+  def withConf[A](spark: SparkSession, confs: (String, Any)*)(body: => A): A = {
+    val set = spark.conf.getAll // explicitly set keys only, no defaults
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** [[withConf]] with the RocksDB state-store provider. */
+  def withRocksDb[A](spark: SparkSession)(body: => A): A =
+    withConf(spark, rocksDbState)(body)
 }

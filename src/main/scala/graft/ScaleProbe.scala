@@ -49,18 +49,6 @@ object ScaleProbe {
           .windowTopN(stream, sizeUs = 3600000000L, slideUs = 300000000L, n = 5))
       }
 
-    def withRocksDb(s: SparkSession)(body: => DataFrame): DataFrame = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try body
-      finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
-      }
-    }
-
     // the round-13 chunk-dedup skew adversary: every doc carries the same
     // ~1500-token boilerplate tail, so ~45 CDC chunk fingerprints are
     // duplicated across the WHOLE corpus (cut positions synchronize once
@@ -173,9 +161,9 @@ object ScaleProbe {
       "probe_chunk_acct_synth_window" ->
         ((s: SparkSession, dir: String) => chunkDedupStatsWindowed(synthChunks(s, dir))),
       "probe_hot_items_stream_eventgrain_rocksdb" ->
-        ((s: SparkSession, dir: String) => withRocksDb(s)(eventGrain(s, dir))),
+        ((s: SparkSession, dir: String) => GraftSession.withRocksDb(s)(eventGrain(s, dir))),
       "probe_hot_items_stream_rocksdb" ->
-        ((s: SparkSession, dir: String) => withRocksDb(s)(twoStage(s, dir))),
+        ((s: SparkSession, dir: String) => GraftSession.withRocksDb(s)(twoStage(s, dir))),
       // asymmetric decontamination axis — the REAL deployment shape:
       // train grows with <dir>, the benchmark stays pinned to sf0.1's
       // even-id docs (the declared query's parity split grows BOTH
@@ -247,13 +235,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val dirs = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (d <- dirs; n <- names) {
       def pass(): Double = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftSession.withRocksDb
 import graft.io.Tables
 import graft.ops._
 import graft.streaming.{Replay, StateMachines, StreamJoins, WindowTriggers}
@@ -30,21 +31,6 @@ object SparkEntry {
 
   private def embeddingsIdVec(t: Tables): DataFrame =
     t.embeddings.select(col("vec_id").as("id"), col("embedding").as("vec"))
-
-  /** Run `body` with the RocksDB state-store provider set (required by
-    * `transformWithState`), restoring the previous provider after — the
-    * replay inside is eager, so the conf scope is correct. */
-  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-  }
 
   /** The banded MinHash signature frame (key = "band|band-hash", ts =
     * epoch + doc_id s, id, sig) the streaming LSH index consumes — the
@@ -101,7 +87,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_hot_items")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- windowed aggregations (reference A1–A8, W3/W4) ----
     "q_pv_hourly" -> ((s, dir) => {
       // A3/W4: tumbling-hour page views (PageViewApp)
@@ -5263,7 +5249,7 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
         |  CAST(pe - ps AS BIGINT) AS piece_tokens
         |FROM kept""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "q_pv_hourly" -> pvHourlySql,
     "d_decon_spans" -> deconSpansSql,
     "d_decon_redact" -> deconRedactSql,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -19,7 +18,8 @@ import scala.concurrent.duration.Duration
   *      queries leaves k comparable parquet dirs + the oracle SQL, so the
   *      driver's DuckDB compare can still score everything that finished.
   *   2. Per-query verdict lines append to `progress.jsonl` as each query
-  *      completes (`{"name":…,"status":"ok"|"err","sec":…}`), so
+  *      completes (`{"name":…,"status":"ok"|"err","sec":…}`, plus the
+  *      failure's `error` on an `err` line), so
   *      wall-clock triage and partial-run accounting never depend on the
   *      final summary being reached.
   *   3. Batch queries run BEFORE the `*_stream` replays: the replays are
@@ -45,37 +45,35 @@ import scala.concurrent.duration.Duration
   *   - a comma-separated name list: debug selection (unchanged).
   */
 object Verify {
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the record unparseable and silently zero its correctness count. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A failure's cause as `ExceptionClass: message`. */
+  private[graft] def cause(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
+
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     val (sfDir, outDir) = (args(0), args(1))
     val sel = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
     // (1) oracle SQL first: static content, must survive any timeout
     val oracleJson = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
 
     // (3) replay scratch → tmpfs when available and not already chosen
@@ -106,7 +104,7 @@ object Verify {
       Files.writeString(progress, line + "\n",
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
-    logLine(s"""{"run":"start","sf":${q(sfDir)},"declared":${ordered.size},"par":$par,"replay_scratch":${q(scratch)}}""")
+    logLine(s"""{"run":"start","sf":${jsonStr(sfDir)},"declared":${ordered.size},"par":$par,"replay_scratch":${jsonStr(scratch)}}""")
 
     // Stream replays run at a REDUCED state-partition count (default 8):
     // at gate scale every micro-batch pays a fixed per-partition state
@@ -118,12 +116,12 @@ object Verify {
     // partition-count-invariant, and the oracle hash-compare is the
     // proof per query per run.
     val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+    val batchParts = spark.conf.get("spark.sql.shuffle.partitions")
 
     def runOne(name: String): Unit = {
       val sess = spark.newSession()
       sess.conf.set("spark.sql.shuffle.partitions",
-        if (name.endsWith("_stream")) streamParts else cpus)
-      sess.conf.set("spark.sql.session.timeZone", "UTC")
+        if (name.endsWith("_stream")) streamParts else batchParts)
       Files.deleteIfExists(Paths.get(s"$outDir/$name.error")) // no stale tombstones
       val tq = System.nanoTime()
       // repartition(1), not coalesce(1): coalesce folds the whole final
@@ -132,17 +130,16 @@ object Verify {
       try {
         allQueries(name)(sess, sfDir).repartition(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        logLine(f"""{"name":${q(name)},"status":"ok","sec":${(System.nanoTime() - tq) / 1e9}%.2f}""")
+        logLine(f"""{"name":${jsonStr(name)},"status":"ok","sec":${(System.nanoTime() - tq) / 1e9}%.2f}""")
       } catch { case e: Throwable =>
         // Round-7 lesson: a silent stderr line made 45 failed queries
         // vanish from the driver's record entirely. Leave a tombstone so
         // every declared query produces a trace — an `err` row, never an
         // omission.
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        try Files.writeString(Paths.get(s"$outDir/$name.error"),
-          s"${e.getClass.getName}: ${e.getMessage}\n")
+        System.err.println(s"[verify] $name failed: ${cause(e)}")
+        try Files.writeString(Paths.get(s"$outDir/$name.error"), cause(e) + "\n")
         catch { case _: Throwable => () }
-        logLine(f"""{"name":${q(name)},"status":"err","sec":${(System.nanoTime() - tq) / 1e9}%.2f,"error":${q(String.valueOf(e.getMessage))}}""")
+        logLine(f"""{"name":${jsonStr(name)},"status":"err","sec":${(System.nanoTime() - tq) / 1e9}%.2f,"error":${jsonStr(cause(e))}}""")
       }
     }
 

@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.{
   * deadline, deleted/re-armed as the pending set changes.
   *
   * NOTE: `transformWithState` requires the RocksDB state store provider
-  * (`GraftSession.builder(rocksdbStateStore = true)`); the HDFS-backed
+  * (`GraftSession.withRocksDb`); the HDFS-backed
   * default provider rejects the operator.
   */
 object Tws {

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.io.Tables
 
 /** Restart recovery — the production property the replay harness never
@@ -25,10 +25,6 @@ import graft.io.Tables
   */
 class CheckpointRecoverySpec extends SparkSpec {
   import spark.implicits._
-
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val schema = Seq.empty[KeyedEvent].toDF().schema
 
@@ -139,8 +135,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     // half the corpus, so BOTH stores are populated — restarted
     // admission must neither re-admit a phase-1 fingerprint nor miss a
     // phase-2 near-dup of a phase-1 doc
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val docRows = Tables(spark, "/root/testdata/sf0.001").documents
         .select(
           lit("").as("key"),
@@ -185,7 +180,7 @@ class CheckpointRecoverySpec extends SparkSpec {
         "restart boundary must land mid-work (phase 1 already emitted everything)")
       assert(got.toSeq == want.toSeq,
         s"restarted ingestGate output != uninterrupted (${got.length} vs ${want.length})")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("lshIndexResumed (initial state, RocksDB) survives kill+restart: the rebased index persists") {
@@ -198,8 +193,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     // a POST-restart hit against a PRE-split doc: only surviving rebased
     // state can produce one, because the restarted query never sees the
     // initial-state channel again (Spark applies it at batch 0 only).
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val sigs = graft.ops.Dedup.minhashSignatures(
         Tables(spark, dir).documents, col("doc_id"), col("text"),
@@ -262,7 +256,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       assert(postRestart.exists { case (_, a, _, _) => a < split },
         "no post-restart hit against a pre-split doc: the rebased index " +
           "did not survive the restart (or the fixture is vacuous)")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws matchWithTimeout (RocksDB) survives kill+restart: named states and timers recover") {
@@ -271,12 +265,11 @@ class CheckpointRecoverySpec extends SparkSpec {
     // snapshot/changelog recovery), and this machine's timeout rows only
     // fire at the sentinel — so the restart boundary provably lands with
     // pending state (unmatched signups) and armed timers in the store
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       recoveryHarness("tws") { df =>
         Tws.matchWithTimeout(df.as[KeyedEvent], "signup", "purchase", timeoutSec = 86400L)
           .toDF()
       }
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 }

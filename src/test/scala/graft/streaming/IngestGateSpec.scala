@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.ops.TrainingPipeline
 
 /** The one-query admission gate ([[StreamingDedup.ingestGate]]): two
@@ -17,13 +17,8 @@ import graft.ops.TrainingPipeline
 class IngestGateSpec extends SparkSpec {
   import spark.implicits._
 
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   test("all four verdicts; exact-dup keeper is the earliest arrival even intra-batch") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       // ≥5 tokens and ≥2 stopwords pass the gate; base/near share all
       // but one trailing token (trigram jaccard ≈ 0.9 ⇒ est ≥ 0.6)
       val base = "the quick brown fox jumps over the lazy dog and then " +
@@ -53,12 +48,11 @@ class IngestGateSpec extends SparkSpec {
       assert(got == Map(
         10L -> "admitted", 11L -> "dup_exact", 12L -> "near_dup",
         13L -> "low_quality", 14L -> "admitted"), s"got $got")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("sigPartitions decouples compute width without changing verdicts") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val base = "the quick brown fox jumps over the lazy dog and then " +
         "runs far away to the quiet green hills beyond the river"
       val near = "the quick brown fox jumps over the lazy dog and then " +
@@ -89,7 +83,7 @@ class IngestGateSpec extends SparkSpec {
       assert(got == Map(
         10L -> "admitted", 11L -> "dup_exact", 12L -> "near_dup",
         13L -> "low_quality", 14L -> "admitted"), s"got $got")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("stream-safe signature column == batch minhashSignatures (portable family)") {

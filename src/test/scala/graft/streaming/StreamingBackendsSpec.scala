@@ -10,10 +10,9 @@ import graft.{GraftSession, SparkSpec}
 
 /** Backend plumbing the other streaming suites don't exercise:
   *
-  *   - the RocksDB state-store provider ([[GraftSession.builder]]'s
-  *     `rocksdbStateStore` flag — the provider for keyed state that
-  *     exceeds executor heap, SURVEY §4) actually running a state
-  *     machine;
+  *   - the RocksDB state-store provider ([[GraftSession.withRocksDb]] —
+  *     the provider for keyed state that exceeds executor heap, SURVEY
+  *     §4) actually running a state machine;
   *   - the Kafka end-to-end shape without a broker: a MemoryStream with
   *     kafka's exact output schema feeding [[Sources.parseCsvValue]] into
   *     a state machine, proving the downstream contract of
@@ -27,12 +26,9 @@ class StreamingBackendsSpec extends SparkSpec {
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
 
   test("consecutiveMatches runs green on RocksDBStateStoreProvider") {
-    // getOrCreate() applies the builder's runtime SQL confs to the shared
-    // test session — exactly how a user flips the flag; restore after.
-    val s = GraftSession.builder("local[4]", rocksdbStateStore = true).getOrCreate()
-    assert(s.conf.get(ProviderConf).contains("RocksDBStateStoreProvider"))
-    try {
-      implicit val ctx = s.sqlContext
+    GraftSession.withRocksDb(spark) {
+      assert(spark.conf.get(ProviderConf).contains("RocksDBStateStoreProvider"))
+      implicit val ctx = spark.sqlContext
       val input = MemoryStream[KeyedEvent]
       val q = StateMachines.consecutiveMatches(input.toDS(), "fail", 2, 2L)
         .writeStream.format("memory").queryName("rocksdb_consec").outputMode("append").start()
@@ -52,7 +48,7 @@ class StreamingBackendsSpec extends SparkSpec {
         // the provider was live for this query, not just configured
         assert(q.lastProgress.stateOperators.nonEmpty)
       } finally q.stop()
-    } finally s.conf.unset(ProviderConf)
+    }
   }
 
   test("q_hot_items_stream replays on RocksDBStateStoreProvider == batch twin (sf0.01)") {
@@ -62,9 +58,7 @@ class StreamingBackendsSpec extends SparkSpec {
     // under the provider end-to-end — 12 micro-batches, watermark
     // eviction, timer firing — and asserts the output is IDENTICAL to the
     // batch twin that the DuckDB oracle checks.
-    spark.conf.set(ProviderConf,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.01"
       val streamed = graft.SparkEntry.queries("q_hot_items_stream")(spark, dir)
       val batch = graft.SparkEntry.queries("q_hot_items")(spark, dir)
@@ -74,7 +68,7 @@ class StreamingBackendsSpec extends SparkSpec {
       val got = rows(streamed)
       assert(got.nonEmpty)
       assert(got == rows(batch))
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("socketStream reads lines from a live loopback TCP server (S2, e2e)") {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.ops.Dedup
 
 /** The streaming MinHash-LSH index ([[StreamingDedup.lshIndex]]):
@@ -13,10 +13,6 @@ import graft.ops.Dedup
   */
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
-
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The declared d_dedup_lsh_stream banded-signature frame over `dir`'s
     * documents (key, ts, id, sig — docs "arrive" in doc_id order). */
@@ -44,8 +40,7 @@ class StreamingDedupSpec extends SparkSpec {
     }.collect().map(r => (r.getInt(0), r.getString(1).toLong, r.getString(2).toLong, r.getInt(3)))
 
   test("signature-estimate verify tracks the exact-Jaccard batch op (precision/recall >= 0.9)") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val stream = runStream(dir, nChunks = 10)
       val streamPairs = stream.map { case (_, a, b, _) => (a, b) }.toSet
@@ -59,12 +54,11 @@ class StreamingDedupSpec extends SparkSpec {
       assert(hit / streamPairs.size >= 0.9,
         s"precision ${hit / streamPairs.size} (measured 1.0 at both sf0.001 and sf0.01)")
       assert(hit / exact.size >= 0.9, s"recall ${hit / exact.size}")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("deconHits: the streaming verdict ladder fires all five classes in one query") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val base = "the quick brown fox jumps over the lazy dog"
       val evalText = "we walked to the store and bought a loaf of bread"
       val arrivals = Seq(
@@ -97,7 +91,7 @@ class StreamingDedupSpec extends SparkSpec {
         7L -> "near_dup",
         9L -> "contaminated",
         11L -> "admitted"))
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("deconHitsExact under 2s order jitter: hit set is order-invariant and equals batch") {
@@ -137,8 +131,7 @@ class StreamingDedupSpec extends SparkSpec {
     // always reports more work (wall-clock timers/TTL can fire any time)
     // — so processAllAvailable / Trigger.AvailableNow never drain, and
     // the harness must POLL a continuously-running query instead.
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       implicit val ctx = spark.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val sig = Array.fill(64)(7L)
@@ -227,7 +220,7 @@ class StreamingDedupSpec extends SparkSpec {
       } finally vq.stop()
       import scala.jdk.CollectionConverters._
       assert(vecHits.asScala.isEmpty, s"expired vector must stop matching: $vecHits")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("rebase: at-rest indexState + resumed stream == the uninterrupted run's post-split hits") {
@@ -236,8 +229,7 @@ class StreamingDedupSpec extends SparkSpec {
     // it (lshIndexResumed, initial-state channel, fresh checkpoint) —
     // every post-rebase arrival must see EXACTLY the corpus an
     // uninterrupted run would have indexed by then
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = bandedEvents(dir)
       val full = runStream(dir, nChunks = 10).toSet
@@ -259,12 +251,11 @@ class StreamingDedupSpec extends SparkSpec {
         "vacuous rebase: no hit crosses the rebase boundary (rebased state never matched)")
       assert(full.exists { case (_, _, b, _) => b < split },
         "vacuous split: the uninterrupted run has no pre-split hits to exclude")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("index state carries across micro-batches: chunking never changes the output") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val a = runStream(dir, nChunks = 3).toSet
       val b = runStream(dir, nChunks = 10).toSet
@@ -275,6 +266,6 @@ class StreamingDedupSpec extends SparkSpec {
         assert(x < y, s"band $band emitted ($x, $y) out of arrival order")
         assert(nAgree >= 4 && nAgree * 5 >= 192, s"($x,$y) n_agree=$nAgree under threshold")
       }
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 }

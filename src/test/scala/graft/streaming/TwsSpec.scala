@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** The `transformWithState` machine ([[Tws]]) — the modern
   * StatefulProcessor API — must carry EXACTLY the semantics of its
@@ -17,15 +17,10 @@ import graft.SparkSpec
 class TwsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   test("StatefulProcessor matchWithTimeout: matched, timeout via named timer, resp_no_req") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[KeyedEvent]
       val q = Tws.matchWithTimeout(input.toDS(), "req", "resp", timeoutSec = 60L)
@@ -51,12 +46,11 @@ class TwsSpec extends SparkSpec {
           ("u3", "resp_no_req", ts("2020-01-01 00:00:10"), ts("2020-01-01 00:00:10"), "p9"),
           ("zz", "matched", ts("2020-01-01 01:00:00"), ts("2020-01-01 01:00:01"), "r9")))
       } finally q.stop()
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("transformWithState == flatMapGroupsWithState machine on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -76,12 +70,11 @@ class TwsSpec extends SparkSpec {
       assert(tws.exists(_._2 == "matched") && tws.exists(_._2 == "timeout"),
         s"fixture must exercise both paths: ${tws.map(_._2)}")
       assert(tws == fmgws)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.reconcile == StateMachines.reconcile on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -101,12 +94,11 @@ class TwsSpec extends SparkSpec {
       assert(Set("matched", "left_only", "right_only").subsetOf(tws.map(_._2)),
         s"fixture must exercise all three paths: ${tws.map(_._2)}")
       assert(tws == fmgws)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.windowTopN == StateMachines.windowTopN on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -126,12 +118,11 @@ class TwsSpec extends SparkSpec {
       assert(tws.nonEmpty, "gate is vacuous: no windows emitted")
       assert(tws.exists(_._4 > 1), s"fixture must rank >1 item per window")
       assert(tws == fmgws)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.asOf == StateMachines.asOf on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -151,12 +142,11 @@ class TwsSpec extends SparkSpec {
       assert(tws.exists(_._2 == "matched") && tws.exists(_._2 == "no_build"),
         s"fixture must exercise both paths: ${tws.map(_._2)}")
       assert(tws == fmgws)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.funnel == StateMachines.funnel on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -178,12 +168,11 @@ class TwsSpec extends SparkSpec {
       assert(tws.map(_._2).size >= 2 && tws.exists(_._2 >= 2),
         s"fixture must exercise distinct chain depths: ${tws.map(_._2)}")
       assert(tws == fmgws)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.consecutiveMatches and Tws.dailyThreshold == their fGWS twins on replayed real events") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -211,15 +200,14 @@ class TwsSpec extends SparkSpec {
       assert(dayTws.exists(_._2 == "warn") && dayTws.exists(_._2 == "pass"),
         s"fixture must exercise pass and warn: ${dayTws.map(_._2)}")
       assert(dayTws == dayF, s"day machine diverged (${dayTws.size} vs ${dayF.size})")
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.windowTopN under 1s order jitter: still the exact batch answer") {
     // the ReplaySoakSpec windowTopN soak, on the new API: watermark delay
     // 4s > 2×jitter keeps every displaced row ahead of its window's
     // timer, so the MapState collector emits exactly the batch top-N
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val clicks = graft.io.Tables(spark, dir).events
         .filter(col("event_type") === "click")
@@ -247,12 +235,11 @@ class TwsSpec extends SparkSpec {
           col("rank").cast("long").as("rank"))
         .as[(Timestamp, Long, Long, Long)].collect().toSet
       assert(batch.nonEmpty && streamed == batch)
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 
   test("Tws.cepRun == Cep.run on replayed real events (times(3).within + followedBy patterns)") {
-    spark.conf.set(ProviderConf, RocksDb)
-    try {
+    GraftSession.withRocksDb(spark) {
       val dir = "/root/testdata/sf0.001"
       val events = graft.io.Tables(spark, dir).events
         .select(
@@ -280,6 +267,6 @@ class TwsSpec extends SparkSpec {
         assert(tws.nonEmpty, s"$label: gate is vacuous")
         assert(tws == fmgws, s"$label: tws != fGWS NFA")
       }
-    } finally spark.conf.unset(ProviderConf)
+    }
   }
 }
