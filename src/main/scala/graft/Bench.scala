@@ -238,6 +238,9 @@ object Bench {
     // cost, not operator cost, and re-paying it per pass both understated
     // rows/sec and tripled the gate's wall-clock. Disclosed as
     // `chunk_prep_sec`; every pass still starts from a FRESH checkpoint.
+    // Preparing evaluates the events scan and the chunking window once
+    // (one partitioned write for all chunks), so its cost does not grow
+    // with nChunks.
     val tPrep = System.nanoTime()
     val prep = Replay.prepareKeyed(keyed, nChunks = 4)
     val prepSec = (System.nanoTime() - tPrep) / 1e9

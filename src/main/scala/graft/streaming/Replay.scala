@@ -1,12 +1,15 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** File-replay harness: run a STREAMING formulation of an operator over a
   * batch events frame — chopped into time-ordered micro-batches through
@@ -20,8 +23,12 @@ import org.apache.spark.sql.functions._
   * against the same SQL oracle as its batch twin.
   *
   * Mechanics:
-  *   - the input frame is globally sorted by (ts, id) and split into
-  *     `nChunks` files with ascending mtimes; `maxFilesPerTrigger = 1`
+  *   - one `ntile(nChunks)` window over (ts, id) — the jittered sort key
+  *     when `orderJitterSec` > 0 — splits the input into chunks, and ONE
+  *     partitioned write produces every chunk file, each in that order
+  *     (an empty chunk still gets an empty file); the input plan runs
+  *     once, whatever `nChunks` is;
+  *   - the files get explicitly ascending mtimes; `maxFilesPerTrigger = 1`
   *     makes each file one micro-batch, replayed chronologically — so
   *     watermarks advance monotonically and state carries across many
   *     batches (the seam single-batch tests never stress);
@@ -39,8 +46,10 @@ import org.apache.spark.sql.functions._
   *     finalizes. The keyed state machines ignore the sentinel kind by
   *     construction.
   *
-  * The one driver-side action is a scalar max(ts) (to place the
-  * sentinels) — everything else is distributed.
+  * Preparing a replay runs three driver-side actions: the chunk
+  * write, a scalar max(ts) read back from the written chunk files (to
+  * place the sentinels), and one write of both sentinel batches (plus
+  * one empty-file write when some chunk has no rows).
   */
 object Replay {
 
@@ -235,7 +244,9 @@ object Replay {
   }
 
   /** Chop `src` into `nChunks` mtime-ordered chunk files + two sentinel
-    * batches under a fresh scratch dir; returns the dir. */
+    * batches under a fresh scratch dir; returns the dir. A failed write
+    * deletes the dir before rethrowing, so no caller ever owns a partial
+    * one. */
   private def prepareCore(
       src: DataFrame,
       nChunks: Int,
@@ -253,34 +264,86 @@ object Replay {
       .filter(Files.isDirectory(_))
       .map(Files.createTempDirectory(_, "graft-replay"))
       .getOrElse(Files.createTempDirectory("graft-replay"))
+    try {
+      writeChunks(src, nChunks, orderJitterSec, sentinel, tmp)
+      tmp
+    } catch {
+      case e: Throwable =>
+        deleteTree(tmp)
+        throw e
+    }
+  }
 
-    def writeOne(df: DataFrame, i: Int): Unit = {
-      // repartition(1), not coalesce(1): keep the upstream sort parallel,
-      // only the chunk's rows cross a single-partition exchange
-      df.repartition(1).write.mode("overwrite").parquet(s"$tmp/c$i")
-      new java.io.File(s"$tmp/c$i").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach(p => Files.move(p.toPath, java.nio.file.Paths.get(s"$tmp/in_$i.parquet")))
-      Thread.sleep(5) // distinct mtimes keep replay order deterministic
+  private def writeChunks(
+      src: DataFrame,
+      nChunks: Int,
+      orderJitterSec: Long,
+      sentinel: (Timestamp, Int) => DataFrame,
+      tmp: java.nio.file.Path): Unit = {
+    val spark = src.sparkSession
+    def file(i: Int) = tmp.resolve(s"in_$i.parquet")
+
+    // Write `df` (src's columns + chunk number `__c`) partitioned by `__c`
+    // in ONE job, then move chunk i's single part file to in_i.parquet.
+    // An empty chunk gets no partition dir from the writer; it becomes an
+    // empty file in src's schema, so every chunk stays one micro-batch.
+    lazy val emptyFile = {
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], src.schema)
+        .write.parquet(s"$tmp/empty")
+      partFiles(tmp.resolve("empty")).head
+    }
+    def writeParts(df: DataFrame, name: String, chunks: Range): Unit = {
+      df.write.partitionBy("__c").parquet(s"$tmp/$name")
+      for (i <- chunks) {
+        val part = tmp.resolve(name).resolve(s"__c=$i")
+        if (!Files.isDirectory(part)) Files.copy(emptyFile, file(i))
+        else partFiles(part) match {
+          case Seq(f) => Files.move(f, file(i))
+          case fs => throw new IllegalStateException(
+            s"replay chunk $i: expected one part file, got ${fs.size}")
+        }
+      }
     }
 
     val orderKey =
       if (orderJitterSec == 0L) unix_micros(col("ts"))
       else unix_micros(col("ts")) +
         (pmod(xxhash64(col("id")), lit(2 * orderJitterSec + 1)) - orderJitterSec) * 1000000L
-    val chunks = src.withColumn(
-      "__c", ntile(nChunks).over(Window.orderBy(orderKey, col("id"))))
-    for (i <- 1 to nChunks)
-      writeOne(chunks.filter(col("__c") === i).drop("__c"), i)
+    // The un-partitioned window already holds every row in one ordered
+    // partition; sorting it by (chunk, orderKey, id) satisfies the
+    // partitioned writer's own ordering requirement, so it adds no sort
+    // and each chunk file keeps replay order. src and the window run once.
+    writeParts(
+      src.withColumn("__c", ntile(nChunks).over(Window.orderBy(orderKey, col("id"))))
+        .sortWithinPartitions(col("__c"), orderKey, col("id")),
+      "chunks", 1 to nChunks)
 
-    val maxTs = src.agg(max(col("ts"))).head.getTimestamp(0)
-    for (j <- 0 until 2) {
-      // 30 days past max event time: beyond any window/timer deadline the
-      // declared queries use (<= 24 h)
+    // max(ts) from the written chunks (schema given: no inference job),
+    // not from a re-run of src's plan
+    val maxTs = spark.read.schema(src.schema)
+      .parquet((1 to nChunks).map(file(_).toString): _*)
+      .agg(max(col("ts"))).head.getTimestamp(0)
+    // 30 days past max event time: beyond any window/timer deadline the
+    // declared queries use (<= 24 h); both sentinel batches in one write
+    val sentinels = (0 until 2).map { j =>
       val sTs = new Timestamp(maxTs.getTime + 30L * 86400 * 1000 + j * 1000)
-      writeOne(sentinel(sTs, j).select(src.columns.map(col): _*), nChunks + 1 + j)
-    }
-    tmp
+      sentinel(sTs, j).select(src.columns.map(col): _*).withColumn("__c", lit(nChunks + 1 + j))
+    }.reduce(_ union _)
+    writeParts(sentinels.coalesce(1), "sentinels", nChunks + 1 to nChunks + 2)
+
+    // the file source orders micro-batches by mtime: set them explicitly
+    // ascending, one second apart (coarse-mtime filesystems), ending now
+    val t0 = System.currentTimeMillis() - (nChunks + 2) * 1000L
+    for (i <- 1 to nChunks + 2)
+      Files.setLastModifiedTime(file(i), FileTime.fromMillis(t0 + i * 1000L))
+  }
+
+  /** The parquet part files directly under `dir` (not the writer's .crc
+    * side files). */
+  private def partFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally ls.close()
   }
 
   /** One streaming run over a prepared chunk dir: fresh checkpoint (a

@@ -1,15 +1,15 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.SparkSpec
 
-/** Multi-micro-batch soak: replay the real sf0.001 events table through a
-  * file stream in ~10 time-ordered chunks (maxFilesPerTrigger=1 → one
-  * micro-batch per chunk) and check the streaming consecutive-fail state
+/** Multi-micro-batch soak: replay the real sf0.001 events table through
+  * [[Replay.keyedEvents]] in 10 time-ordered chunks (maxFilesPerTrigger=1 →
+  * one micro-batch per chunk) and check the streaming consecutive-fail state
   * machine emits exactly the batch formulation's rows. Exercises state
   * carry-over and watermark advancement across many batches on real data —
   * the seam the 2-batch scenario tests don't stress.
@@ -26,40 +26,35 @@ class ReplaySoakSpec extends SparkSpec {
         col("event_type").as("kind"),
         col("event_id").cast("string").as("id"))
 
-    // 10 time-ordered chunk files, written in ascending mtime order so the
-    // file source replays them chronologically
-    val tmp = Files.createTempDirectory("graft-replay-soak")
-    val chunks = events.withColumn(
-      "chunk", ntile(10).over(org.apache.spark.sql.expressions.Window.orderBy("ts")))
-    for (i <- 1 to 10) {
-      chunks.filter(col("chunk") === i).drop("chunk")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/c$i")
-      val f = new java.io.File(s"$tmp/c$i").listFiles().filter(_.getName.endsWith(".parquet"))
-      f.foreach(p => java.nio.file.Files.move(
-        p.toPath, java.nio.file.Paths.get(s"$tmp/in_$i.parquet")))
-      Thread.sleep(5) // distinct mtimes keep replay order deterministic
+    // micro-batches counted off the listener bus: progress events arrive
+    // in order, so once the replay's termination is seen, all are counted
+    val progress = new java.util.concurrent.atomic.AtomicInteger(0)
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
     }
-
-    val stream = spark.readStream
-      .schema(events.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$tmp/in_*.parquet")
-      .as[KeyedEvent]
-    val out = StateMachines.consecutiveMatches(stream, "error", 2, 7200L)
-    val q = out.writeStream.format("memory").queryName("soak").outputMode("append").start()
+    spark.streams.addListener(listener)
     try {
-      q.processAllAvailable()
-      val streamed = spark.table("soak").as[TaggedRow]
-        .collect().map(r => (r.key, r.first_ts, r.last_ts)).toSet
+      // 10 time-ordered chunk files + 2 sentinel batches, one micro-batch each
+      val streamed = Replay
+        .keyedEvents(events, nChunks = 10) { stream =>
+          StateMachines.consecutiveMatches(stream, "error", 2, 7200L).toDF()
+        }
+        .as[TaggedRow].collect().map(r => (r.key, r.first_ts, r.last_ts)).toSet
       val batch = graft.ops.Sequences
         .consecutiveMatches(
           events.toDF(), col("key"), col("ts"), col("id"), col("kind") === "error", 2, 7200L)
         .as[(String, Timestamp, Timestamp)].collect().toSet
       assert(streamed == batch)
       assert(batch.nonEmpty)
-      val nBatches = q.recentProgress.length
+      assert(terminated.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val nBatches = progress.get()
       assert(nBatches >= 5, s"expected many micro-batches, got $nBatches")
-    } finally q.stop()
+    } finally spark.streams.removeListener(listener)
   }
 
   test("windowTopN under 1s order jitter: exact final top-N (lateness inside the margin)") {
