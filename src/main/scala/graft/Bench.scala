@@ -272,33 +272,27 @@ object Bench {
     try Seq(
       one("windowTopN")(s =>
         StateMachines.windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
-      // the two-stage plan on transformWithState + RocksDB: the
-      // head-to-head for the API migration. Stage-1 grains differ BY
-      // DESIGN (r14 profile): the fGWS row above runs sliding stage 1
-      // (GroupState's whole-map rewrite makes pane folding slower there);
-      // this row folds pane partials through MapState point writes —
-      // measured fastest of the three forms (docs/SCALE.md)
-      oneRocksDb("windowTopN_tws")(s =>
-        graft.streaming.Tws
-          .windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
+      // the *_rocksdb rows replay the same machines on the RocksDB
+      // provider — the one a deployment whose state outgrows executor
+      // heap runs (SURVEY §4) — so the record carries a number for it
+      oneRocksDb("windowTopN_rocksdb")(s =>
+        StateMachines.windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
       oneAt("windowTopN_p8", 8)(s =>
         StateMachines.windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
-      oneAt("windowTopN_tws_p8", 8, rocksDb = true)(s =>
-        graft.streaming.Tws
-          .windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
+      oneAt("windowTopN_rocksdb_p8", 8, rocksDb = true)(s =>
+        StateMachines.windowTopN(s, sizeUs = 3600000000L, slideUs = 300000000L, n = 5).toDF()),
       one("matchWithTimeout")(s =>
         StateMachines.matchWithTimeout(s, "signup", "purchase", timeoutSec = 86400L).toDF()),
-      oneRocksDb("matchWithTimeout_tws")(s =>
-        graft.streaming.Tws
-          .matchWithTimeout(s, "signup", "purchase", timeoutSec = 86400L).toDF()),
+      oneRocksDb("matchWithTimeout_rocksdb")(s =>
+        StateMachines.matchWithTimeout(s, "signup", "purchase", timeoutSec = 86400L).toDF()),
       one("asOf")(s =>
         StateMachines.asOf(s, buildKind = "purchase", probeKind = "click").toDF()),
-      oneRocksDb("asOf_tws")(s =>
-        graft.streaming.Tws.asOf(s, buildKind = "purchase", probeKind = "click").toDF()),
+      oneRocksDb("asOf_rocksdb")(s =>
+        StateMachines.asOf(s, buildKind = "purchase", probeKind = "click").toDF()),
       one("funnel")(s =>
         StateMachines.funnel(s, Seq("view", "click", "purchase"), 86400L).toDF()),
-      oneRocksDb("funnel_tws")(s =>
-        graft.streaming.Tws.funnel(s, Seq("view", "click", "purchase"), 86400L).toDF()),
+      oneRocksDb("funnel_rocksdb")(s =>
+        StateMachines.funnel(s, Seq("view", "click", "purchase"), 86400L).toDF()),
       ingestRow(spark, sfDir),
       f""""chunk_prep_sec":$prepSec%.2f""",
       // report the RESOLVED scratch path, not an assumed "tmpfs" label —
@@ -318,7 +312,7 @@ object Bench {
 
   /** One stream entry under the round-13 min-of-passes protocol — the
     * round-12 batch discipline extended to the stream rows (the r12
-    * driver run showed funnel_tws swing 11,027 → 5,481 rows/s under
+    * bench showed a stream row swing 11,027 → 5,481 rows/s under
     * contention with NO flag on the record): each machine replays up to
     * `STREAM_PASSES + 2` times — `STREAM_PASSES` base passes, then while
     * the observed spread exceeds 1.5× up to 2 adaptive retries (contention

@@ -124,20 +124,6 @@ object ScaleProbe {
       // default (heap) store and on RocksDB, where the fGWS whole-map
       // state rewrite is real serialization I/O per window per batch
       "probe_hot_items_stream_eventgrain" -> eventGrain _,
-      // stage-1 grain foil: the PANE form on fGWS — round 13's declared
-      // plan, reverted in round 14 after profiling showed the collector's
-      // GroupState whole-map rewrite dominates on this API (4,252 vs
-      // 6,198 rows/s sliding at sf0.1; the pane grain stays declared on
-      // transformWithState where MapState point-writes make it fastest —
-      // see StateMachines.windowTopN). This row keeps the comparison
-      // reproducible.
-      "probe_hot_items_stream_pane1" ->
-        ((s: SparkSession, dir: String) =>
-          graft.streaming.Replay.keyedEvents(hotItemsInput(s, dir)) { stream =>
-            shape(graft.streaming.StateMachines.windowTopN(
-              stream, sizeUs = 3600000000L, slideUs = 300000000L, n = 5,
-              paneStage1 = true))
-          }),
       // boilerplate-chunk skew axis: declared de-skewed accounting vs the
       // round-12 window-sort formulation, both over the injected corpus
       "probe_chunk_dedup_boiler" ->

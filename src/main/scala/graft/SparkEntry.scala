@@ -259,33 +259,6 @@ object SparkEntry {
           .select(col("key").cast("long").as("user_id"), col("first_ts").as("day"))
       }
     }),
-    "q_ad_blacklist_tws_stream" -> ((s, dir) => {
-      // q_ad_blacklist_stream's machine on transformWithState (round 10
-      // — with this and the login-fail twin, EVERY reference state
-      // machine runs on both state APIs). Same rows, same oracle.
-      withRocksDb(s) {
-        Replay.keyedEvents(keyedEventsFrame(Tables(s, dir))) { stream =>
-          graft.streaming.Tws
-            .dailyThreshold(stream, "click", threshold = 2L)
-            .toDF()
-            .filter(col("tag") === "warn")
-            .select(col("key").cast("long").as("user_id"), col("first_ts").as("day"))
-        }
-      }
-    }),
-    "q_login_fail_tws_stream" -> ((s, dir) => {
-      // q_login_fail_stream's run-detection machine on transformWithState
-      // (reference C3's state-machine flavor; the CEP flavor already has
-      // its Tws twin). Same rows, same oracle.
-      withRocksDb(s) {
-        Replay.keyedEvents(keyedEventsFrame(Tables(s, dir))) { stream =>
-          graft.streaming.Tws
-            .consecutiveMatches(stream, "error", n = 2, maxGapSec = 7200L)
-            .toDF()
-            .select(col("key").cast("long").as("user_id"), col("first_ts"), col("last_ts"))
-        }
-      }
-    }),
     "q_order_timeout_stream" -> ((s, dir) => {
       // C6/C7 streaming: request→response with EventTimeTimeout timers.
       // Requests restricted to the first signup per user so the streaming
@@ -331,53 +304,6 @@ object SparkEntry {
           when(col("tag") === "matched", "matched")
             .when(col("tag") === "left_only", "pay_no_signup")
             .otherwise("signup_no_pay").as("status"))
-      }
-    }),
-
-    "q_reconcile_tws_stream" -> ((s, dir) => {
-      // q_reconcile_stream's machine carried onto transformWithState
-      // (round 10): named list states for the two open-side buffers +
-      // one re-armed named deadline timer, RocksDB-backed — the API the
-      // largest-state machines should run on at 100 TB. Same rows, same
-      // oracle; TwsSpec pins row parity with the fGWS machine.
-      withRocksDb(s) {
-        val t = Tables(s, dir)
-        val input = firstPerUser(t, "purchase").unionByName(firstPerUser(t, "signup"))
-        Replay.keyedEvents(input) { stream =>
-          val out = graft.streaming.Tws
-            .reconcile(stream, "purchase", "signup", toleranceSec = 86400L)
-            .toDF()
-          val part = split(col("info"), "\\|")
-          out.select(
-            col("key").cast("long").as("user_id"),
-            when(col("tag") === "matched", part.getItem(0))
-              .when(col("tag") === "left_only", col("info"))
-              .cast("long").as("p_id"),
-            when(col("tag") === "matched", part.getItem(1))
-              .when(col("tag") === "right_only", col("info"))
-              .cast("long").as("s_id"),
-            when(col("tag") === "matched", "matched")
-              .when(col("tag") === "left_only", "pay_no_signup")
-              .otherwise("signup_no_pay").as("status"))
-        }
-      }
-    }),
-
-    "q_cep_login_fail3_tws_stream" -> ((s, dir) => {
-      // the generic CEP combinator compiled onto transformWithState
-      // (round 10): the NFA's open partials as a named list state, the
-      // horizon as one re-armed named timer. Same pattern, same oracle
-      // as q_login_fail3; TwsSpec pins NFA row parity on both pattern
-      // families.
-      import graft.streaming.Cep
-      withRocksDb(s) {
-        Replay.keyedEvents(keyedEventsFrame(Tables(s, dir))) { stream =>
-          graft.streaming.Tws.cepRun(stream,
-            Cep.Pattern.begin("fail")(_.kind == "error").times(3).within(21600L))
-            .toDF()
-            .select(col("key").cast("long").as("user_id"),
-              col("first_ts"), col("last_ts"))
-        }
       }
     }),
 
@@ -511,36 +437,6 @@ object SparkEntry {
           col("first_ts").as("p_ts"),
           when(col("tag") === "matched", part.getItem(1)).cast("long").as("c_id"),
           when(col("tag") === "matched", col("last_ts")).as("c_ts"))
-      }
-    }),
-    "q_asof_tws_stream" -> ((s, dir) => {
-      // q_asof_stream's machine carried onto transformWithState
-      // (round 10): builds/probes as two named list states, the earliest
-      // pending probe as one re-armed named deadline timer,
-      // RocksDB-backed. Same rows, same oracle; TwsSpec pins row parity
-      // with the fGWS machine.
-      withRocksDb(s) {
-        val input = Tables(s, dir).events
-          .filter(col("event_type").isin("click", "purchase"))
-          .select(
-            col("user_id").cast("string").as("key"),
-            col("ts"),
-            col("event_type").as("kind"),
-            lpad(col("event_id").cast("string"), 12, "0").as("id"))
-        Replay.keyedEvents(input) { stream =>
-          val out = graft.streaming.Tws
-            .asOf(stream, buildKind = "click", probeKind = "purchase",
-              watermarkDelay = "2 seconds")
-            .toDF()
-          val part = split(col("info"), "\\|")
-          out.select(
-            col("key").cast("long").as("user_id"),
-            when(col("tag") === "matched", part.getItem(0))
-              .otherwise(col("info")).cast("long").as("p_id"),
-            col("first_ts").as("p_ts"),
-            when(col("tag") === "matched", part.getItem(1)).cast("long").as("c_id"),
-            when(col("tag") === "matched", col("last_ts")).as("c_ts"))
-        }
       }
     }),
     "q_reconcile" -> ((s, dir) => {
@@ -3444,32 +3340,6 @@ object SparkEntry {
             col("rank"))
       }
     }),
-    "q_hot_items_tws_stream" -> ((s, dir) => {
-      // q_hot_items_stream's two-stage plan carried onto
-      // transformWithState + RocksDB (round 12): identical stage-1
-      // aggregation; the collector's exactly-once marker is a NAMED
-      // ValueState with a named GC timer. Same rows, same oracle;
-      // TwsSpec pins row parity with the fGWS twin.
-      withRocksDb(s) {
-        val input = Tables(s, dir).events
-          .filter(col("event_type") === "click")
-          .select(
-            lpad(col("user_id").cast("string"), 12, "0").as("key"),
-            col("ts"),
-            col("event_type").as("kind"),
-            col("event_id").cast("string").as("id"))
-        Replay.keyedEvents(input) { stream =>
-          graft.streaming.Tws
-            .windowTopN(stream, sizeUs = 3600000000L, slideUs = 300000000L, n = 5)
-            .toDF()
-            .select(
-              col("window_start"),
-              col("item").cast("long").as("user_id"),
-              col("cnt"),
-              col("rank"))
-        }
-      }
-    }),
     "q_hot_pages_stream" -> ((s, dir) => {
       // T2 streaming: same two-stage plan as q_hot_items_stream over
       // 30m/10m windows keyed by event_type (URL stand-in), top-3 — the
@@ -3561,25 +3431,6 @@ object SparkEntry {
           col("n_reached"),
           col("ts_first"),
           col("ts_reached"))
-    }),
-    "q_funnel_tws_stream" -> ((s, dir) => {
-      // q_funnel_stream's machine carried onto transformWithState
-      // (round 10): the step chain as a named list state, the
-      // (horizon, tombstone) pair as a named value state, the window
-      // deadline as one re-armed named timer, RocksDB-backed. Same rows,
-      // same oracle; TwsSpec pins row parity with the fGWS machine.
-      withRocksDb(s) {
-        Replay
-          .keyedEvents(keyedEventsFrame(Tables(s, dir))) { stream =>
-            graft.streaming.Tws
-              .funnel(stream, Seq("view", "click", "purchase"), 86400L).toDF()
-          }
-          .select(
-            col("key").cast("long").as("user_id"),
-            col("n_reached"),
-            col("ts_first"),
-            col("ts_reached"))
-      }
     }),
     "q_retention_stream" -> ((s, dir) => {
       // streaming twin of q_retention: the state machine emits one FINAL
@@ -4091,9 +3942,9 @@ SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens
 FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
   }
 
-  /** Shared two-stream-reconcile oracle for q_reconcile_stream and its
-    * transformWithState twin (round 10) — first purchase/signup per user
-    * full-outer-joined within the ±24h tolerance. */
+  /** q_reconcile_stream's two-stream-reconcile oracle — first
+    * purchase/signup per user full-outer-joined within the ±24h
+    * tolerance. */
   private lazy val reconcileStreamSql: String =
     """WITH p AS (
       |  SELECT user_id, event_id, ts,
@@ -4174,7 +4025,7 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
       |    AND e.ts <= s1.t1 + INTERVAL 1 DAY GROUP BY 1
       |)""".stripMargin
 
-  /** Shared by q_funnel_stream and its transformWithState twin: only keys
+  /** q_funnel_stream's oracle: only keys
     * whose chain STARTED (s1 rows) emit — emission is anchored at
     * t1 + horizon, so keys without a step-1 event stay silent. */
   private lazy val funnelStreamSql: String =
@@ -4653,7 +4504,7 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
     * per-doc 32-bit shingle-hash sets, `sig` = (doc_id, i, m) minima,
     * `band` = 16×4 banded md5 keys) — read by [[minhashSql]] (at-rest
     * pair dedup) and [[lshStreamSql]] (the streaming index twin). */
-  /** Shared by q_ad_blacklist_stream and its transformWithState twin. */
+  /** q_ad_blacklist_stream's oracle. */
   private lazy val adBlacklistStreamSql: String =
     """SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
       |FROM events WHERE event_type = 'click'
@@ -5256,9 +5107,7 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
     "q_pv_hourly_stream" -> pvHourlySql,
     "q_sessions_stream" -> sessionsSql,
     "q_login_fail_stream" -> loginFailSql,
-    "q_login_fail_tws_stream" -> loginFailSql,
     "q_ad_blacklist_stream" -> adBlacklistStreamSql,
-    "q_ad_blacklist_tws_stream" -> adBlacklistStreamSql,
     "q_order_timeout_stream" ->
       """WITH req AS (
         |  SELECT user_id, event_id AS req_id, ts AS req_ts,
@@ -5279,7 +5128,6 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
         |  CASE WHEN resp_ts IS NOT NULL THEN 'matched' ELSE 'timeout' END AS status
         |FROM matched""".stripMargin,
     "q_reconcile_stream" -> reconcileStreamSql,
-    "q_reconcile_tws_stream" -> reconcileStreamSql,
     "q_uv_hourly" -> uvHourlySql,
     "q_uv_pane_stream" -> uvHourlySql,
     "q_pv_lateness_stream" -> pvHourlySql,
@@ -5295,8 +5143,6 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
       "WHERE event_type = 'click'", "user_id", "user_id", 300000000L, 12, 5, "DESC"),
     "q_hot_items_stream" -> slidingOracle(
       "WHERE event_type = 'click'", "user_id", "user_id", 300000000L, 12, 5, "DESC"),
-    "q_hot_items_tws_stream" -> slidingOracle(
-      "WHERE event_type = 'click'", "user_id", "user_id", 300000000L, 12, 5, "DESC"),
     "q_hot_pages" -> slidingOracle(
       "", "event_type", "event_type", 600000000L, 3, 3, "DESC"),
     "q_hot_pages_stream" -> slidingOracle(
@@ -5308,12 +5154,10 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
     "q_login_fail" -> loginFailSql,
     "q_login_fail3" -> loginFail3Sql,
     "q_cep_login_fail3_stream" -> loginFail3Sql,
-    "q_cep_login_fail3_tws_stream" -> loginFail3Sql,
     "q_order_timeout" -> orderTimeoutSql,
     "q_cep_order_timeout_stream" -> orderTimeoutSql,
     "q_asof_join" -> asOfSql,
     "q_asof_stream" -> asOfSql,
-    "q_asof_tws_stream" -> asOfSql,
     "q_interval_join" -> intervalJoinSql,
     "q_interval_stream" -> intervalJoinSql,
     "q_dedup_stream" -> "SELECT DISTINCT user_id, event_type FROM events",
@@ -5435,7 +5279,6 @@ FROM tok JOIN enc USING (word) WHERE word <> '' GROUP BY doc_id"""
     // emission is anchored at t1 + horizon, so keys without a step-1
     // event have nothing to anchor to and stay silent by design
     "q_funnel_stream" -> funnelStreamSql,
-    "q_funnel_tws_stream" -> funnelStreamSql,
     "t_user_sequences" ->
       """WITH r AS (
         |  SELECT user_id, event_type,

@@ -23,7 +23,7 @@ import scala.concurrent.duration.Duration
   *      wall-clock triage and partial-run accounting never depend on the
   *      final summary being reached.
   *   3. Batch queries run BEFORE the `*_stream` replays: the replays are
-  *      the slow tail (49 × file-source micro-batch replay), so a timeout
+  *      the slow tail (42 × file-source micro-batch replay), so a timeout
   *      truncates the tail, not a random prefix. Replay scratch (chunk
   *      files + checkpoint) goes to /dev/shm when writable — the same
   *      fsync-tax fix Bench shipped in round 13 (measured ~4 ms/fsync

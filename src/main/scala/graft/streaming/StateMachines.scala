@@ -296,13 +296,9 @@ object StateMachines {
   /** Streaming per-window top-N, TWO-STAGE — the reference's own shape
     * (`HotItemApp.java:62` pre-aggregates per (itemId, window) with an
     * incremental `AggregateFunction` BEFORE `:64`'s `keyBy(windowEnd)`
-    * collector sees anything): a watermark-final built-in PANE
-    * aggregation (tumbling, slide-width) produces per-(pane, item)
-    * counts; a stateless explode maps each pane final into the
-    * size/slide sliding windows containing it; and the window-keyed
-    * collector folds pane counts until the window completes
-    * ([[graft.ops.WindowAggs.slidingCountPanes]]' trick in streaming
-    * form).
+    * collector sees anything): a watermark-final built-in SLIDING
+    * aggregation produces per-(window, item) counts, and the
+    * window-keyed collector ranks them once the window completes.
     *
     * Why two stages at 100 TB: the single-machine form
     * ([[windowTopNEventGrain]]) keys raw events by window start, so every
@@ -310,89 +306,57 @@ object StateMachines {
     * lands on ONE state partition whose state row is the whole counter
     * map. Here stage 1 is a native streaming aggregation — partial
     * (map-side) combine BEFORE its shuffle, state distributed across all
-    * window/pane × item keys — and stage 2's exchange carries only
+    * window × item keys — and stage 2's exchange carries only
     * aggregate CARDINALITY, never event volume.
     *
-    * Stage-1 grain — the round-13/14 profiled trade. `paneStage1 = true`
-    * aggregates slide-width TUMBLING panes (one stage-1 state row per
-    * event instead of size/slide of them — 12× fewer writes at 1h/5m)
-    * and lets the collector FOLD pane partials per window. But on THIS
-    * API the fold is the bottleneck, not stage 1: `GroupState` can only
-    * rewrite the window's whole counter map, so every batch that
-    * delivers a pane re-serializes every item seen so far — measured
-    * 4,252 rows/s pane vs 6,198 sliding at sf0.1 (100k events, min of
-    * 3). The default is therefore the SLIDING stage 1 (every window's
-    * finals arrive in one batch; the collector emits immediately and
-    * writes only a one-bit marker), and the pane form stays runnable as
-    * the probe flag. The pane-grain plan IS the declared one on
-    * `transformWithState` ([[graft.streaming.Tws.windowTopN]]): RocksDB
-    * `MapState` folds panes with per-item point writes and measured
-    * 7,799 rows/s — fastest of all three, and the 100 TB shape (stage-1
-    * writes AND collector writes both per-distinct-item).
+    * Stage-1 grain — the round-13/14 profiled trade. Slide-width
+    * TUMBLING panes would write one stage-1 state row per event instead
+    * of size/slide of them (12× fewer at 1h/5m), but then the collector
+    * must FOLD pane partials, and `GroupState` can only rewrite the
+    * window's whole counter map: every batch that delivers a pane
+    * re-serializes every item seen so far — measured 4,252 rows/s pane
+    * vs 6,198 sliding at sf0.1 (100k events, min of 3). So stage 1 is
+    * SLIDING: every window's finals arrive in one batch, and the
+    * collector emits immediately and writes only a one-bit marker.
     *
     * Collector contract: an Append-mode streaming aggregation emits a
-    * pane's finals exactly once, in the micro-batch whose eviction
-    * watermark first passes the pane end. The LAST pane of a window ends
-    * exactly at windowEnd, so the batch that delivers it is the batch
-    * whose watermark passed windowEnd — the collector emits immediately
-    * when it sees the watermark beyond windowEnd, and otherwise arms an
-    * event-time timer at windowEnd + 1 ms (the reference's `onTimer`
-    * deadline) to cover windows whose final pane is empty. An `emitted`
+    * window's finals exactly once, in the micro-batch whose eviction
+    * watermark first passes the window end — the collector emits
+    * immediately when it sees the watermark beyond windowEnd, and
+    * otherwise folds what arrived and arms an event-time timer at
+    * windowEnd + 1 ms (the reference's `onTimer` deadline). An `emitted`
     * marker + GC timer guard exactly-once emission against
     * beyond-contract stragglers, which are dropped like any other
     * too-late data.
     *
     * Sentinel rows must flow INTO the aggregate and be excluded there
     * (conditional count + cnt>0 filter): a plain filter would be pushed
-    * below the watermark node and the last pane would never finalize
+    * below the watermark node and the last window would never finalize
     * (same rule as every aggregation pipeline over [[Replay]]).
-    *
-    * Both forms share this collector — under sliding stage 1 a window's
-    * finals all arrive in the emit-now batch, so the fold degenerates to
-    * immediate emission; the oracle rows are identical either way
-    * (StateMachinesSpec pins it).
     */
   def windowTopN(
       events: Dataset[KeyedEvent],
       sizeUs: Long,
       slideUs: Long,
       n: Int,
-      watermarkDelay: String = "2 seconds",
-      paneStage1: Boolean = false): Dataset[WindowTopRow] = {
+      watermarkDelay: String = "2 seconds"): Dataset[WindowTopRow] = {
     require(sizeUs % slideUs == 0, "window size must be a multiple of slide")
     val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val nW = (sizeUs / slideUs).toInt
-    val watermarked = events.withWatermark("ts", watermarkDelay)
     // window_time (= window.end − 1 µs) keeps a watermark-tagged
     // event-time attribute in the collector's input — EventTimeTimeout
-    // requires one to be visible on the stateful op's child. The pane →
-    // windows explode is Column-based for the same reason (a typed map
-    // would strip the watermark metadata).
-    val finals =
-      if (paneStage1)
-        watermarked
-          .groupBy(window(col("ts"), s"$slideUs microseconds"), col("key").as("item"))
-          .agg(count(when(col("kind") =!= Replay.Sentinel, 1)).as("cnt"))
-          .filter(col("cnt") > 0)
-          .select(
-            explode(array((0 until nW).map(i =>
-              unix_micros(col("window.start")) - lit(i.toLong * slideUs)): _*)).as("win"),
-            col("item"), col("cnt"),
-            window_time(col("window")).as("wt"))
-          .as[(Long, String, Long, Timestamp)]
-      else
-        watermarked
-          .groupBy(
-            window(col("ts"), s"$sizeUs microseconds", s"$slideUs microseconds"),
-            col("key").as("item"))
-          .agg(count(when(col("kind") =!= Replay.Sentinel, 1)).as("cnt"))
-          .filter(col("cnt") > 0)
-          .select(
-            unix_micros(col("window.start")).as("win"), col("item"), col("cnt"),
-            window_time(col("window")).as("wt"))
-          .as[(Long, String, Long, Timestamp)]
+    // requires one to be visible on the stateful op's child.
+    val finals = events.withWatermark("ts", watermarkDelay)
+      .groupBy(
+        window(col("ts"), s"$sizeUs microseconds", s"$slideUs microseconds"),
+        col("key").as("item"))
+      .agg(count(when(col("kind") =!= Replay.Sentinel, 1)).as("cnt"))
+      .filter(col("cnt") > 0)
+      .select(
+        unix_micros(col("window.start")).as("win"), col("item"), col("cnt"),
+        window_time(col("window")).as("wt"))
+      .as[(Long, String, Long, Timestamp)]
     def top(counts: Map[String, Long], winStartUs: Long): Iterator[WindowTopRow] =
       counts.toSeq
         .sortBy { case (item, cnt) => (-cnt, item) }
@@ -412,7 +376,7 @@ object StateMachines {
         if (state.hasTimedOut) {
           val st = state.get
           if (st.emitted) { state.remove(); Iterator.empty } // marker GC
-          else { markEmitted(); top(st.counts, winStartUs) } // final pane was empty
+          else { markEmitted(); top(st.counts, winStartUs) } // deadline: emit the fold
         } else {
           val st = state.getOption.getOrElse(PaneTopNState(Map.empty, emitted = false))
           if (st.emitted) Iterator.empty // beyond-contract straggler: too late
@@ -420,11 +384,11 @@ object StateMachines {
             var m = st.counts
             for ((_, item, cnt, _) <- it) m = m.updated(item, m.getOrElse(item, 0L) + cnt)
             if (state.getCurrentWatermarkMs() * 1000L >= winStartUs + sizeUs) {
-              // this batch delivered the window's last pane: complete now
+              // the watermark passed windowEnd: complete now
               markEmitted(); top(m, winStartUs)
             } else {
               state.update(PaneTopNState(m, emitted = false))
-              // windowEnd + 1 ms, clamped above the watermark (late panes
+              // windowEnd + 1 ms, clamped above the watermark (late rows
               // inside the delay margin re-arm an expired deadline)
               state.setTimeoutTimestamp(math.max(
                 (winStartUs + sizeUs) / 1000L + 1L,

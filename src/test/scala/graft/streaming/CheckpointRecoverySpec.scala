@@ -18,10 +18,10 @@ import graft.io.Tables
   * store, and the file sink's transaction log makes the output
   * exactly-once across the restart.
   *
-  * Both state APIs are covered: `flatMapGroupsWithState` (HDFS-backed
-  * state) and `transformWithState` (RocksDB, named states + named
-  * timers). The restart boundary lands mid-corpus, so in-flight state
-  * (unmatched requests, half-complete funnels) must survive it.
+  * Both providers are covered: the session default (HDFS-backed state)
+  * and RocksDB, the provider for state beyond executor heap. The
+  * restart boundary lands mid-corpus, so in-flight state (unmatched
+  * requests, half-complete funnels) must survive it.
   */
 class CheckpointRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -261,13 +261,15 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("Tws matchWithTimeout (RocksDB) survives kill+restart: named states and timers recover") {
     // same machine as the fGWS test on purpose: the variable under test
-    // is the STATE BACKEND + API (named states, named timers, RocksDB
-    // snapshot/changelog recovery), and this machine's timeout rows only
-    // fire at the sentinel — so the restart boundary provably lands with
-    // pending state (unmatched signups) and armed timers in the store
+    // is the STATE BACKEND (RocksDB snapshot/changelog recovery), and
+    // this machine's timeout rows only fire at the sentinel — so the
+    // restart boundary provably lands with pending state (unmatched
+    // signups) and armed timers in the store. The test name predates
+    // the retired transformWithState twin and is kept as the test's id.
     GraftSession.withRocksDb(spark) {
-      recoveryHarness("tws") { df =>
-        Tws.matchWithTimeout(df.as[KeyedEvent], "signup", "purchase", timeoutSec = 86400L)
+      recoveryHarness("rocksdb") { df =>
+        StateMachines
+          .matchWithTimeout(df.as[KeyedEvent], "signup", "purchase", timeoutSec = 86400L)
           .toDF()
       }
     }

@@ -282,16 +282,9 @@ class StateMachinesSpec extends SparkSpec {
       StateMachines.windowTopN(_, sizeUs = 1800000000L, slideUs = 600000000L, n = 3).toDF())
     val eventGrain = rows(
       StateMachines.windowTopNEventGrain(_, sizeUs = 1800000000L, slideUs = 600000000L, n = 3).toDF())
-    // the pane-stage-1 probe form (the declared plan on transformWithState;
-    // on fGWS it pays the GroupState whole-map re-serialization — see the
-    // windowTopN scaladoc) must stay row-identical too
-    val paneStage1 = rows(
-      StateMachines.windowTopN(
-        _, sizeUs = 1800000000L, slideUs = 600000000L, n = 3, paneStage1 = true).toDF())
     assert(twoStage.nonEmpty, "gate is vacuous: no windows emitted")
     assert(twoStage.exists(_._4 > 1), "fixture must rank >1 item per window")
     assert(twoStage == eventGrain)
-    assert(paneStage1 == eventGrain)
   }
 
   test("retentionDays(stream): cohort final at watermark, days emit once, late day buffers") {

@@ -54,20 +54,34 @@ class StreamingBackendsSpec extends SparkSpec {
   test("q_hot_items_stream replays on RocksDBStateStoreProvider == batch twin (sf0.01)") {
     // The 100 TB posture claims RocksDB for state that exceeds executor
     // heap; this runs the LARGEST-state replay on the correctness record
-    // (the streaming top-N collector holds every open (window, key) pane)
-    // under the provider end-to-end — 12 micro-batches, watermark
-    // eviction, timer firing — and asserts the output is IDENTICAL to the
-    // batch twin that the DuckDB oracle checks.
+    // (the streaming top-N collector holds every open (window, key)
+    // partial) under the provider end-to-end — 12 micro-batches,
+    // watermark eviction, timer firing — and asserts the output is
+    // IDENTICAL to the batch twin that the DuckDB oracle checks.
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq
+    val sf01 = "/root/testdata/sf0.01"
     GraftSession.withRocksDb(spark) {
-      val dir = "/root/testdata/sf0.01"
-      val streamed = graft.SparkEntry.queries("q_hot_items_stream")(spark, dir)
-      val batch = graft.SparkEntry.queries("q_hot_items")(spark, dir)
-      val cols = batch.columns.sorted.toSeq
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSet
-      val got = rows(streamed)
+      val got = rows(graft.SparkEntry.queries("q_hot_items_stream")(spark, sf01))
       assert(got.nonEmpty)
-      assert(got == rows(batch))
+      assert(got.toSet == rows(graft.SparkEntry.queries("q_hot_items")(spark, sf01)).toSet)
+    }
+    // the reference apps' event machines, replayed on both providers:
+    // the RocksDB replay must return exactly the default-provider rows
+    // (the oracle-checked ones) — fGWS timers, watermark eviction and
+    // Cep.run's NFA state all round-trip through the RocksDB store.
+    // sf0.001 holds no three-failure run, so the CEP replay reads sf0.01
+    // to compare non-empty outputs.
+    val sf001 = "/root/testdata/sf0.001"
+    for ((name, dir) <- Seq("q_login_fail_stream", "q_ad_blacklist_stream",
+        "q_reconcile_stream", "q_asof_stream", "q_hot_items_stream", "q_funnel_stream")
+        .map(_ -> sf001) :+ ("q_cep_login_fail3_stream" -> sf01)) {
+      val build = graft.SparkEntry.queries(name)
+      val want = rows(build(spark, dir))
+      val got = GraftSession.withRocksDb(spark)(rows(build(spark, dir)))
+      assert(want.nonEmpty, s"$name: vacuous fixture, no rows at $dir")
+      assert(got == want, s"$name: RocksDB replay != default-provider replay " +
+        s"(${got.size} vs ${want.size} rows)")
     }
   }
 
