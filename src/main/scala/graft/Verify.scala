@@ -4,6 +4,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import graft.queries.ReferenceQueries
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -86,15 +88,15 @@ object Verify {
     val allQueries = SparkEntry.queries
     val selected: Set[String] = sel match {
       case None            => allQueries.keySet
-      case Some("--quick") =>
-        allQueries.keySet.filter(n => n.startsWith("q_") && !n.endsWith("_stream"))
-      case Some("--batch") => allQueries.keySet.filterNot(_.endsWith("_stream"))
+      case Some("--quick") => ReferenceQueries.all.filterNot(_.stream).map(_.name).toSet
+      case Some("--batch") => allQueries.values.filterNot(_.stream).map(_.name).toSet
       case Some(list)      => list.split(",").toSet
     }
+    // an unknown name runs in the batch tier and fails there with its cause
+    def stream(name: String): Boolean = allQueries.get(name).exists(_.stream)
     // batch tier first, replay tail last: a killed run loses replays, not
     // a random prefix of the cheap batch record
-    val (streamNames, batchNames) =
-      selected.toSeq.sorted.partition(_.endsWith("_stream"))
+    val (streamNames, batchNames) = selected.toSeq.sorted.partition(stream)
     val ordered = batchNames ++ streamNames
 
     val progress = Paths.get(s"$outDir/progress.jsonl")
@@ -121,7 +123,7 @@ object Verify {
     def runOne(name: String): Unit = {
       val sess = spark.newSession()
       sess.conf.set("spark.sql.shuffle.partitions",
-        if (name.endsWith("_stream")) streamParts else batchParts)
+        if (stream(name)) streamParts else batchParts)
       Files.deleteIfExists(Paths.get(s"$outDir/$name.error")) // no stale tombstones
       val tq = System.nanoTime()
       // repartition(1), not coalesce(1): coalesce folds the whole final
@@ -148,7 +150,7 @@ object Verify {
     try ordered.grouped(par).foreach { wave =>
       Await.result(Future.sequence(wave.map(n => Future(runOne(n)))), Duration.Inf)
       // centralized cache lifecycle: free any persist() a query made so
-      // the 240-query dump holds storage flat (see Bench.runOne); safe
+      // the whole dump holds storage flat (see Bench.runOne); safe
       // here because the wave barrier means nothing is in flight
       spark.catalog.clearCache()
     } finally pool.shutdown()

@@ -11,16 +11,18 @@ import scala.jdk.CollectionConverters._
   */
 class ContractSpec extends SparkSpec {
 
-  test("every oracle key has a query implementation") {
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"oracles without queries: $dangling")
+  test("query names are unique across families") {
+    // the name-keyed maps keep only the last of two equal names
+    val names = SparkEntry.families.flatten.map(_.name)
+    val dupes = names.diff(names.distinct).distinct
+    assert(dupes.isEmpty, s"declared more than once: ${dupes.mkString(", ")}")
   }
 
   test("every query runs at smoke scale and entry returns rows") {
     val dir = "/root/testdata/sf0.001"
     val failures = SparkEntry.queries.flatMap { case (name, fn) =>
       try { fn(spark, dir).limit(1).collect(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+      catch { case e: Throwable => Some(s"$name: ${Verify.cause(e).take(100)}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
     assert(SparkEntry.entry(spark).count() > 0)
