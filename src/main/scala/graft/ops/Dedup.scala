@@ -39,12 +39,12 @@ object Dedup {
       .drop("rank")
 
   /** Incremental-ingest exact dedup: which `incoming` docs to ADMIT
-    * against an existing `corpus` — not already present (by content
+    * against an existing corpus — not already present (by content
     * fingerprint) AND the min-id representative among incoming copies of
-    * the same content. The every-snapshot ingest shape: the corpus side
-    * collapses to a DISTINCT fingerprint set (16 bytes/doc — text never
-    * crosses the wire), the batch dedups internally in the same pass.
-    * Returns (fp, doc_id).
+    * the same content. The every-snapshot ingest shape: the corpus enters
+    * only as its stored fingerprint set (`seenFps`, [[fingerprintSet]]:
+    * 16 bytes/doc — corpus text is never read), the batch dedups
+    * internally in the same pass. Returns (fp, doc_id).
     *
     * Scale: one fingerprint-grain anti-join + one fingerprint-grain agg;
     * at 100 TB the corpus fingerprint set is a materialized table
@@ -52,23 +52,6 @@ object Dedup {
     * increment costs O(batch) — the corpus is never rescanned.
     */
   def incrementalIngest(
-      corpus: DataFrame,
-      incoming: DataFrame,
-      id: Column,
-      text: Column): DataFrame =
-    incrementalIngestIndexed(fingerprintSet(corpus, text), incoming, id, text)
-
-  /** The stored fingerprint set of a corpus (or of an admitted batch —
-    * the per-increment append): the 16-byte-per-doc exact-dedup side
-    * table [[incrementalIngestIndexed]] screens against. At 100 TB this
-    * is a materialized table maintained across ingests, exactly the
-    * [[nearDupIndex]] discipline at fingerprint grain. */
-  def fingerprintSet(df: DataFrame, text: Column): DataFrame =
-    df.select(TextOps.fingerprint(text).as("fp")).distinct()
-
-  /** [[incrementalIngest]] against a STORED fingerprint set — the corpus
-    * enters as its (fp) table, never as text. */
-  def incrementalIngestIndexed(
       seenFps: DataFrame, // (fp)
       incoming: DataFrame,
       id: Column,
@@ -78,6 +61,14 @@ object Dedup {
       .join(seenFps, Seq("fp"), "left_anti")
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("doc_id"))
+
+  /** The stored fingerprint set of a corpus (or of an admitted batch —
+    * the per-increment append): the 16-byte-per-doc exact-dedup side
+    * table [[incrementalIngest]] screens against. At 100 TB this is a
+    * materialized table maintained across ingests, exactly the
+    * [[nearDupIndex]] discipline at fingerprint grain. */
+  def fingerprintSet(df: DataFrame, text: Column): DataFrame =
+    df.select(TextOps.fingerprint(text).as("fp")).distinct()
 
   /** Cluster-size distribution of the near-dup graph: for each component
     * size ≥ 2, how many clusters have that size — the dedup QA view that
@@ -753,7 +744,7 @@ object Dedup {
   /** Batch-incremental NEAR-dup admission — the near-dup counterpart of
     * [[incrementalIngest]] and the at-rest twin of the streaming
     * admission index ([[graft.streaming.StreamingDedup.lshIndexResumed]]):
-    * which `incoming` docs to ADMIT against an existing `corpus`, where
+    * which `incoming` docs to ADMIT against an existing corpus, where
     * "already present" means MinHash-LSH candidate + exact n-gram
     * Jaccard ≥ `threshold` (not just byte equality). The daily-crawl
     * shape: each batch is screened against everything ingested so far
@@ -762,69 +753,35 @@ object Dedup {
     * near-dups ANY smaller-id batch doc drops, matching
     * `lshIndex`'s every-arrival-indexes semantics).
     *
-    * Returns one row per incoming doc: (doc_id, verdict) with verdict ∈
-    * 'near_dup_corpus' (corpus hit wins) | 'near_dup_batch' | 'admitted'.
-    *
-    * Scale: signatures/bands for the corpus are recomputed here for the
-    * self-contained form, but at 100 TB they are a STORED index — the
-    * (doc_id, band, band_hash) table and the per-doc shingle-hash sets
-    * are materialized once at first ingest and appended with each
-    * admitted batch (the [[incrementalIngest]] fingerprint-set
-    * discipline), so an increment costs O(batch) band hashing + one
-    * bucket join against a corpus table bucketed by (band, band_hash) —
-    * no corpus re-scan, no corpus shuffle. The batch side is the small
-    * one by assumption; AQE broadcasts its band rows when they fit
-    * (the [[crossCorpusNearDups]] asymmetry note). Verification joins
-    * carry only 32-bit shingle hashes and doc ids, never text.
-    *
-    * Cache lifecycle: the two shingle-hash frames persist() for the
-    * plan's lifetime (each feeds signatures AND verify) — the
-    * [[editDistancePairs]] note applies: free between repeated calls
-    * with `spark.catalog.clearCache()` or accept LRU eviction.
-    */
-  def incrementalNearIngest(
-      corpus: DataFrame,
-      incoming: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame = {
-    // one persisted hash-row frame per side feeds signatures AND the
-    // exact-Jaccard verify (the minhashDedup seam)
-    val exC = minhashRows(corpus, id, text, shingleLen, portableHash).distinct().persist()
-    val exB = minhashRows(incoming, id, text, shingleLen, portableHash).distinct().persist()
-    def banded(ex: DataFrame): DataFrame =
-      bandedFromSignatures(
-        signaturesFromRows(ex.withColumn("h32", h32Of(portableHash)), k, seed),
-        k, bands, portableHash)
-    val bndC = banded(exC)
-    val bndB = banded(exB)
-    assembleNearIngestVerdicts(incoming, id, exC, bndC, exB, bndB, threshold)
-  }
-
-  /** [[incrementalNearIngest]] against a STORED corpus index — the plan
-    * an actual 100 TB deployment runs every increment: the corpus enters
-    * as its two materialized index tables, never as text.
-    *
+    * The corpus enters only as its two STORED index tables, never as
+    * text — the plan a 100 TB deployment runs every increment:
     *  - `corpusHashes` (doc_id, s): distinct shingle hashes per corpus
     *    doc (the exact-Jaccard verify side).
     *  - `corpusBands` (doc_id, band, band_hash): the LSH bucket table.
     *
-    * Both come from [[nearDupIndex]] — built once at first ingest,
+    * Both come from [[nearDupIndex]] — built once at first ingest and
     * appended with each admitted batch's [[nearDupIndex]] rows (the
     * [[incrementalIngest]] fingerprint-set discipline at near-dup
-    * grain). Output is row-for-row [[incrementalNearIngest]]'s (equality
-    * pinned in OpsSpec); only the corpus side's provenance differs.
-    * Batch-side frames persist here (each feeds banding AND verify);
-    * the stored tables stream through their single consumer each.
+    * grain), so an increment costs O(batch) band hashing + one bucket
+    * join against a corpus table bucketed by (band, band_hash) — no
+    * corpus re-scan, no corpus shuffle. The batch side is the small one
+    * by assumption; AQE broadcasts its band rows when they fit (the
+    * [[crossCorpusNearDups]] asymmetry note). Verification joins carry
+    * only 32-bit shingle hashes and doc ids, never text. Candidates come
+    * from the bucket joins (corpus→batch, earlier-batch→batch); the
+    * verify counts |A∩B| as joined hash rows (the minhashDedup shape).
+    *
+    * Returns one row per incoming doc: (doc_id, verdict) with verdict ∈
+    * 'near_dup_corpus' (corpus hit wins) | 'near_dup_batch' | 'admitted'.
+    *
+    * Cache lifecycle: the batch shingle-hash and band frames persist()
+    * for the plan's lifetime (each feeds several consumers) — the
+    * [[editDistancePairs]] note applies: free between repeated calls
+    * with `spark.catalog.clearCache()` or accept LRU eviction.
     */
-  def incrementalNearIngestIndexed(
-      corpusHashes: DataFrame,
-      corpusBands: DataFrame,
+  def incrementalNearIngest(
+      corpusHashes: DataFrame, // (doc_id, s)
+      corpusBands: DataFrame, // (doc_id, band, band_hash)
       incoming: DataFrame,
       id: Column,
       text: Column,
@@ -835,65 +792,15 @@ object Dedup {
       seed: Long = 42L,
       portableHash: Boolean = false): DataFrame = {
     val exB = minhashRows(incoming, id, text, shingleLen, portableHash).distinct().persist()
-    val bndB = bandedFromSignatures(
-      signaturesFromRows(exB.withColumn("h32", h32Of(portableHash)), k, seed),
-      k, bands, portableHash)
-    assembleNearIngestVerdicts(incoming, id, corpusHashes, corpusBands, exB, bndB, threshold)
-  }
-
-  /** The stored near-dup index of a corpus (or of an admitted batch — the
-    * per-increment append): (hashRows (doc_id, s), bandRows (doc_id,
-    * band, band_hash)) for [[incrementalNearIngestIndexed]]. At 100 TB
-    * both are materialized tables — bandRows bucketed by (band,
-    * band_hash) so each ingest's bucket join never re-shuffles the
-    * corpus; hashRows clustered by doc_id for the verify join.
-    *
-    * The hash-row frame is persisted here: when the pair is consumed
-    * in-memory instead of from storage, hashRows feeds the band
-    * derivation above PLUS (downstream in
-    * [[incrementalNearIngestIndexed]]) the per-doc shingle counts and
-    * the intersect join — three consumers that would each re-run the
-    * tokenize→shingle→minhash scan. Deployments that materialize the
-    * index read parquet and never hit this cache; in-memory callers get
-    * the scan once.
-    */
-  def nearDupIndex(
-      df: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int,
-      k: Int,
-      bands: Int,
-      seed: Long = 42L,
-      portableHash: Boolean = false): (DataFrame, DataFrame) = {
-    val ex = minhashRows(df, id, text, shingleLen, portableHash).distinct().persist()
-    val bnd = bandedFromSignatures(
-      signaturesFromRows(ex.withColumn("h32", h32Of(portableHash)), k, seed),
-      k, bands, portableHash)
-    (ex, bnd)
-  }
-
-  /** Shared back half of the two ingest-screen forms: candidate bucket
-    * joins (corpus→batch, earlier-batch→batch), exact-Jaccard verify
-    * through the shingle-hash rows (|A∩B| = joined row count — the
-    * minhashDedup shape), and the verdict assembly with corpus hits
-    * outranking batch hits.
-    */
-  private def assembleNearIngestVerdicts(
-      incoming: DataFrame,
-      id: Column,
-      exC: DataFrame,
-      bndC: DataFrame,
-      exB: DataFrame,
-      bndB0: DataFrame,
-      threshold: Double): DataFrame = {
     // the batch band table feeds THREE join sides (corpus-candidates
     // probe, both sides of the in-batch self-join) and each reference
     // re-runs the k-minima signature aggregate (64 pmod-min columns)
     // above the persisted hash rows — persist the (doc_id, band, hash)
     // rows instead: 16 small rows per batch doc, one signature pass
-    val bndB = bndB0.persist()
-    val candCorpus = bndC
+    val bndB = bandedFromSignatures(
+      signaturesFromRows(exB.withColumn("h32", h32Of(portableHash)), k, seed),
+      k, bands, portableHash).persist()
+    val candCorpus = corpusBands
       .as("l")
       .join(bndB.as("r"),
         col("l.band") === col("r.band") && col("l.band_hash") === col("r.band_hash"))
@@ -921,7 +828,7 @@ object Dedup {
     }
     incoming
       .select(id.as("doc_id"))
-      .join(hits(candCorpus, exC).withColumn("__corpus_hit", lit(1)),
+      .join(hits(candCorpus, corpusHashes).withColumn("__corpus_hit", lit(1)),
         col("doc_id") === col("b"), "left")
       .drop("b")
       .join(hits(candBatch, exB).withColumn("__batch_hit", lit(1)),
@@ -935,48 +842,51 @@ object Dedup {
           .as("verdict"))
   }
 
-  /** The composed daily-ingest increment — cheap stage first: exact
-    * fingerprint dedup ([[incrementalIngest]]: corpus anti-join +
-    * in-batch min-id keeper, collapsing replica mass BEFORE any
-    * signature work — the exact-collapse-first lesson), then the
-    * near-dup screen ([[incrementalNearIngest]]) over keepers only.
-    * One row per incoming doc: exact hits verdict 'dup_exact' (exact
-    * stage wins even when the copy would also near-dup the corpus);
-    * keepers carry the near stage's verdict.
+  /** The stored near-dup index of a corpus (or of an admitted batch — the
+    * per-increment append): (hashRows (doc_id, s), bandRows (doc_id,
+    * band, band_hash)) for [[incrementalNearIngest]]. At 100 TB both are
+    * materialized tables — bandRows bucketed by (band, band_hash) so
+    * each ingest's bucket join never re-shuffles the corpus; hashRows
+    * clustered by doc_id for the verify join.
+    *
+    * The hash-row frame is persisted here: when the pair is consumed
+    * in-memory instead of from storage, hashRows feeds the band
+    * derivation above PLUS (downstream in [[incrementalNearIngest]]) the
+    * per-doc shingle counts and the intersect join — three consumers
+    * that would each re-run the tokenize→shingle→minhash scan.
+    * Deployments that materialize the index read parquet and never hit
+    * this cache; in-memory callers get the scan once.
     */
-  def ingestIncrement(
-      corpus: DataFrame,
-      incoming: DataFrame,
+  def nearDupIndex(
+      df: DataFrame,
       id: Column,
       text: Column,
       shingleLen: Int,
       k: Int,
       bands: Int,
-      threshold: Double,
       seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame = {
-    val keepers = incrementalIngest(corpus, incoming, id, text)
-      .select(col("doc_id").as("__keep_id"))
-    val kept = incoming.join(keepers, id === col("__keep_id"), "left_semi")
-    val near = incrementalNearIngest(
-      corpus, kept, id, text, shingleLen, k, bands, threshold, seed, portableHash)
-    incoming
-      .select(id.as("doc_id"))
-      .join(near, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("verdict"), lit("dup_exact")).as("verdict"))
+      portableHash: Boolean = false): (DataFrame, DataFrame) = {
+    val ex = minhashRows(df, id, text, shingleLen, portableHash).distinct().persist()
+    val bnd = bandedFromSignatures(
+      signaturesFromRows(ex.withColumn("h32", h32Of(portableHash)), k, seed),
+      k, bands, portableHash)
+    (ex, bnd)
   }
 
-  /** [[ingestIncrement]] against STORED corpus artifacts only — the form
-    * a deployment actually schedules daily: the corpus enters as its
-    * fingerprint set ([[fingerprintSet]]) and its two near-dup index
-    * tables ([[nearDupIndex]]), all three maintained across ingests by
+  /** The composed daily-ingest increment — cheap stage first: exact
+    * fingerprint dedup ([[incrementalIngest]]: corpus anti-join +
+    * in-batch min-id keeper, collapsing replica mass BEFORE any
+    * signature work — the exact-collapse-first lesson), then the
+    * near-dup screen ([[incrementalNearIngest]]) over keepers only.
+    * The corpus enters only as its stored artifacts: its fingerprint
+    * set ([[fingerprintSet]]) and its two near-dup index tables
+    * ([[nearDupIndex]]), all three maintained across ingests by
     * appending each admitted batch's rows; corpus text is never read.
-    * Output is row-for-row [[ingestIncrement]]'s (PipelineSpec pins the
-    * composed equality through [[TrainingPipeline.dailyAdmissionIndexed]]).
+    * One row per incoming doc: exact hits verdict 'dup_exact' (exact
+    * stage wins even when the copy would also near-dup the corpus);
+    * keepers carry the near stage's verdict.
     */
-  def ingestIncrementIndexed(
+  def ingestIncrement(
       corpusFps: DataFrame, // (fp)
       corpusHashes: DataFrame, // (doc_id, s)
       corpusBands: DataFrame, // (doc_id, band, band_hash)
@@ -989,10 +899,10 @@ object Dedup {
       threshold: Double,
       seed: Long = 42L,
       portableHash: Boolean = false): DataFrame = {
-    val keepers = incrementalIngestIndexed(corpusFps, incoming, id, text)
+    val keepers = incrementalIngest(corpusFps, incoming, id, text)
       .select(col("doc_id").as("__keep_id"))
     val kept = incoming.join(keepers, id === col("__keep_id"), "left_semi")
-    val near = incrementalNearIngestIndexed(
+    val near = incrementalNearIngest(
       corpusHashes, corpusBands, kept, id, text,
       shingleLen, k, bands, threshold, seed, portableHash)
     incoming
@@ -1133,6 +1043,9 @@ object Dedup {
     * ([[exactNgramCollisions]] + anti-join) throws away an entire long
     * document for one quoted benchmark sentence.
     *
+    * Always on the portable (md5-derived 32-bit) shingle hashes: the
+    * oracle replays the hit positions at that hash grain.
+    *
     * Scale: the hit join is [[exactNgramCollisions]]'s (32-bit shingle
     * hashes; tiny benchmark side broadcasts, the train explode never
     * shuffles on anything wider). The span merge is a per-DOC
@@ -1147,9 +1060,7 @@ object Dedup {
       id: Column,
       text: Column,
       n: Int = 13,
-      padTokens: Int = 0,
-      portableHash: Boolean = true): DataFrame = {
-    require(portableHash, "span decontamination is declared on the portable hash")
+      padTokens: Int = 0): DataFrame = {
     val trainPos = TextOps.portableShingleHashPosRows(train, id, text, n)
     val evalH = TextOps.portableShingleHashRows(eval, id, text, n)
       .select(col("s")).distinct()
@@ -1204,9 +1115,8 @@ object Dedup {
       text: Column,
       n: Int = 13,
       padTokens: Int = 0,
-      minPieceTokens: Int = 1,
-      portableHash: Boolean = true): DataFrame = {
-    val spans = contaminatedSpans(train, eval, id, text, n, padTokens, portableHash)
+      minPieceTokens: Int = 1): DataFrame = {
+    val spans = contaminatedSpans(train, eval, id, text, n, padTokens)
       .groupBy(col("train_id"))
       .agg(array_sort(collect_list(struct(col("span_start"), col("span_end")))).as("__sp"))
     val empty = array().cast("array<struct<span_start:bigint,span_end:bigint>>")
@@ -1564,27 +1474,20 @@ object Dedup {
     * near-dup pair pass through untouched (left-anti join against the
     * non-canonical cluster members).
     *
-    * `losslessPairs = false` (default, the scale path) blocks candidates
-    * with MinHash-LSH — probabilistic recall, gated in ApproxGatesSpec.
-    * `losslessPairs = true` uses the shared-shingle blocking of
-    * [[ngramJaccardPairs]] instead: exact result (every J ≥ threshold pair
-    * found), more candidates — the right mode when the corpus fits it or
-    * when an exact keep-list is required (it is what the d_drop_near_dups
-    * oracle checks).
+    * Pairs come from [[ngramJaccardPairs]]'s shared-shingle blocking over
+    * the stage-1 representatives: exact result (every J ≥ threshold pair
+    * found) — what the d_drop_near_dups oracle checks. For MinHash-LSH
+    * blocking at scale, compose [[minhashDedup]] over
+    * [[exactRepresentatives]] with the pair-frame overload below.
     */
   def dropNearDuplicates(
       df: DataFrame,
       id: Column,
       text: Column,
       shingleLen: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8,
-      seed: Long = 42L,
-      losslessPairs: Boolean = false): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     val reps = exactRepresentatives(df, id, text)
-    dropNearDuplicates(reps, id,
-      nearDupPairs(reps, id, text, shingleLen, k, bands, threshold, seed, losslessPairs))
+    dropNearDuplicates(reps, id, ngramJaccardPairs(reps, id, text, shingleLen, threshold))
   }
 
   /** Stage-1 of the dedup pipeline, exposed for composition: collapse
@@ -1607,39 +1510,23 @@ object Dedup {
       id === col("__keep"),
       "left_semi")
 
-  /** Stage-2 pair generation, exposed for composition: the (a, b) near-dup
-    * candidate pairs over the stage-1 representatives, lossless
-    * (shared-shingle blocking, every J ≥ threshold pair found) or
-    * MinHash-LSH (probabilistic recall, the scale default).
-    *
-    * This is THE frame to compute once and share: a pipeline that wants
-    * clusters AND a keep-list AND a drop-list should derive all three from
-    * one pair frame ([[connectedComponents]], [[dropNearDuplicates]],
-    * [[dropNearDuplicatesKeepBest]] all accept it) instead of re-running
-    * shingle-explode + self-join per consumer. Pair generation is lazy —
-    * `persist()` (or checkpoint) the result before fanning out, or each
-    * consumer's internal materialization re-runs the upstream.
-    */
-  def nearDupPairs(
-      reps: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8,
-      seed: Long = 42L,
-      losslessPairs: Boolean = false): DataFrame =
-    if (losslessPairs) ngramJaccardPairs(reps, id, text, shingleLen, threshold)
-    else minhashDedup(reps, id, text, shingleLen, k, bands, threshold, seed)
-
   /** Keep-canonical consumer over a SHARED pair frame: drops every
     * non-minimal member of each pair component from `reps` (the stage-1
     * representatives the pairs were generated over — see
-    * [[exactRepresentatives]] / [[nearDupPairs]]). A pipeline that also
-    * wants keep-best or the clusters themselves should run
-    * [[connectedComponents]] once and use the `FromClusters` variants —
-    * CC is iterative and worth sharing just like the pair frame.
+    * [[exactRepresentatives]]; pairs from [[ngramJaccardPairs]] or
+    * [[minhashDedup]] over those reps).
+    *
+    * The pair frame is THE frame to compute once and share: a pipeline
+    * that wants clusters AND a keep-list AND a drop-list should derive
+    * all three from one pair frame ([[connectedComponents]],
+    * [[dropNearDuplicates]], [[dropNearDuplicatesKeepBest]] all accept
+    * it) instead of re-running shingle-explode + self-join per consumer.
+    * Pair generation is lazy — `persist()` (or checkpoint) the pairs
+    * before fanning out, or each consumer's internal materialization
+    * re-runs the upstream. A pipeline that also wants keep-best or the
+    * clusters themselves should run [[connectedComponents]] once and use
+    * the `FromClusters` variants — CC is iterative and worth sharing just
+    * like the pair frame.
     */
   def dropNearDuplicates(reps: DataFrame, id: Column, pairs: DataFrame): DataFrame =
     dropNearDuplicatesFromClusters(reps, id, connectedComponents(pairs))
@@ -1675,14 +1562,10 @@ object Dedup {
       text: Column,
       quality: Column,
       shingleLen: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8,
-      seed: Long = 42L,
-      losslessPairs: Boolean = false): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     val reps = exactRepresentatives(df, id, text)
     dropNearDuplicatesKeepBest(reps, id, quality,
-      nearDupPairs(reps, id, text, shingleLen, k, bands, threshold, seed, losslessPairs))
+      ngramJaccardPairs(reps, id, text, shingleLen, threshold))
   }
 
   /** Keep-best consumer over a SHARED pair frame (see

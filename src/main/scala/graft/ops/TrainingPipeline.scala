@@ -162,40 +162,17 @@ object TrainingPipeline {
     * [[Dedup.crossCorpusNearDupsBloom]] as the drop-in when even that
     * explode is worth pruning. At 100 TB every stage's input is the
     * previous stage's survivors, so the increment's cost tracks the
-    * admitted fraction, not the crawl size; the corpus side enters only
-    * as its fingerprint set and its LSH band table, both maintained
-    * across ingests (never rescanned at text grain).
+    * admitted fraction, not the crawl size.
+    *
+    * The corpus enters only as its STORED artifacts — what the scheduled
+    * daily job runs at 100 TB: its fingerprint set `corpusFps`
+    * ([[Dedup.fingerprintSet]]) and its two near-dup index tables
+    * `corpusHashes` / `corpusBands` ([[Dedup.nearDupIndex]]), all three
+    * appended per admitted batch; corpus TEXT is never read anywhere in
+    * the plan. A caller holding the corpus as text builds the three with
+    * those two functions.
     */
   def dailyAdmission(
-      corpus: DataFrame,
-      incoming: DataFrame,
-      evalSet: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      nearThreshold: Double = 0.6,
-      deconShingleLen: Int = 3,
-      deconThreshold: Double = 0.5,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
-    admissionLadder(incoming, evalSet, id, text, deconShingleLen, deconThreshold) { passed =>
-      Dedup.ingestIncrement(
-        corpus, passed, id, text, shingleLen, k, bands, nearThreshold, seed, portableHash)
-    }
-
-  /** [[dailyAdmission]] against STORED corpus artifacts only — what the
-    * scheduled daily job actually runs at 100 TB: the corpus enters as
-    * its fingerprint set and its two near-dup index tables (all three
-    * appended per admitted batch, maintained by
-    * [[Dedup.fingerprintSet]] / [[Dedup.nearDupIndex]] over each round's
-    * admits); corpus TEXT is never read anywhere in the plan. Same
-    * verdicts as [[dailyAdmission]] given artifacts derived from the
-    * same corpus (PipelineSpec pins the equality), so both share one
-    * oracle.
-    */
-  def dailyAdmissionIndexed(
       corpusFps: DataFrame, // (fp)
       corpusHashes: DataFrame, // (doc_id, s)
       corpusBands: DataFrame, // (doc_id, band, band_hash)
@@ -211,11 +188,15 @@ object TrainingPipeline {
       deconThreshold: Double = 0.5,
       seed: Long = 42L,
       portableHash: Boolean = false): DataFrame =
-    admissionLadder(incoming, evalSet, id, text, deconShingleLen, deconThreshold) { passed =>
-      Dedup.ingestIncrementIndexed(
+    admissionLadder(incoming)({ passed =>
+      Dedup.ingestIncrement(
         corpusFps, corpusHashes, corpusBands, passed, id, text,
         shingleLen, k, bands, nearThreshold, seed, portableHash)
-    }
+    }, { admitted =>
+      Dedup
+        .crossCorpusNearDups(admitted, evalSet, id, text, deconShingleLen, deconThreshold)
+        .select(col("train_id").as("doc_id"))
+    }, id, text)
 
   /** [[dailyAdmission]] with the GPT-3 decontamination rule at admission
     * time: `contaminated` = the admitted sliver shares ANY verbatim
@@ -224,10 +205,13 @@ object TrainingPipeline {
     * shingle hashes), instead of the Jaccard near-dup sweep. This is the
     * batch twin of the streaming `deconHitsExact` screen: the hard rule
     * catches verbatim benchmark leakage that sits far below any
-    * whole-document similarity bar.
+    * whole-document similarity bar. The corpus enters as the same three
+    * stored artifacts as in [[dailyAdmission]].
     */
   def dailyAdmissionHard13(
-      corpus: DataFrame,
+      corpusFps: DataFrame, // (fp)
+      corpusHashes: DataFrame, // (doc_id, s)
+      corpusBands: DataFrame, // (doc_id, band, band_hash)
       incoming: DataFrame,
       evalSet: DataFrame,
       id: Column,
@@ -239,75 +223,25 @@ object TrainingPipeline {
       deconNgram: Int = 13,
       seed: Long = 42L,
       portableHash: Boolean = false): DataFrame =
-    admissionLadderWith(incoming)({ passed =>
+    admissionLadder(incoming)({ passed =>
       Dedup.ingestIncrement(
-        corpus, passed, id, text, shingleLen, k, bands, nearThreshold, seed, portableHash)
+        corpusFps, corpusHashes, corpusBands, passed, id, text,
+        shingleLen, k, bands, nearThreshold, seed, portableHash)
     }, { admitted =>
       Dedup.exactNgramCollisions(admitted, evalSet, id, text, deconNgram, portableHash = true)
         .select(col("train_id").as("doc_id"))
     }, id, text)
 
-  /** [[dailyAdmissionHard13]] against stored corpus artifacts, with the
-    * 13-gram screen running through its bloom-pruned 100 TB form
-    * ([[Dedup.exactNgramCollisionsBloom]] — codegen'd `might_contain`
-    * kills almost every train shingle before any exchange; the exact
-    * join behind it removes the false positives, so this twin shares
-    * [[dailyAdmissionHard13]]'s oracle exactly).
-    */
-  def dailyAdmissionHard13Indexed(
-      corpusFps: DataFrame,
-      corpusHashes: DataFrame,
-      corpusBands: DataFrame,
-      incoming: DataFrame,
-      evalSet: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      nearThreshold: Double = 0.6,
-      deconNgram: Int = 13,
-      expectedEvalShingles: Long = 1000000L,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
-    admissionLadderWith(incoming)({ passed =>
-      Dedup.ingestIncrementIndexed(
-        corpusFps, corpusHashes, corpusBands, passed, id, text,
-        shingleLen, k, bands, nearThreshold, seed, portableHash)
-    }, { admitted =>
-      Dedup.exactNgramCollisionsBloom(
-          admitted, evalSet, id, text, deconNgram, expectedEvalShingles, portableHash = true)
-        .select(col("train_id").as("doc_id"))
-    }, id, text)
-
   /** The shared admission ladder: quality gate in, dedup screen via
-    * `screen` (recompute or stored-index), decontamination of the
-    * admitted sliver, verdict assembly with the declared precedence.
-    * NULL quality signals (degenerate texts) reject on both engines:
-    * coalesce(keep, false) here, COALESCE(cond, false) in the oracle.
-    * The quality frame is deliberately NOT persisted: it feeds five
-    * downstream subtrees, but caching it measured flat at sf0.1
-    * (7.45 vs 7.49 s) — the d_cluster_sizes counter-lesson again (the
-    * near-dup stage dominates; the regex re-runs are noise next to it).
-    */
-  private def admissionLadder(
-      incoming: DataFrame,
-      evalSet: DataFrame,
-      id: Column,
-      text: Column,
-      deconShingleLen: Int,
-      deconThreshold: Double)(screen: DataFrame => DataFrame): DataFrame =
-    admissionLadderWith(incoming)(screen, { admitted =>
-      Dedup
-        .crossCorpusNearDups(admitted, evalSet, id, text, deconShingleLen, deconThreshold)
-        .select(col("train_id").as("doc_id"))
-    }, id, text)
-
-  /** The ladder with a pluggable decontamination screen: `contaminate`
-    * maps the admitted sliver to the (doc_id) rows that hit the
+    * `screen`, decontamination of the admitted sliver via `contaminate`
+    * (maps the admitted sliver to the (doc_id) rows that hit the
     * benchmark — Jaccard sweep for [[dailyAdmission]], the exact-13-gram
-    * rule for [[dailyAdmissionHard13]]. */
-  private def admissionLadderWith(incoming: DataFrame)(
+    * rule for [[dailyAdmissionHard13]]), verdict assembly with the
+    * declared precedence. NULL quality signals (degenerate texts) reject
+    * on both engines: coalesce(keep, false) here, COALESCE(cond, false)
+    * in the oracle.
+    */
+  private def admissionLadder(incoming: DataFrame)(
       screen: DataFrame => DataFrame,
       contaminate: DataFrame => DataFrame,
       id: Column,

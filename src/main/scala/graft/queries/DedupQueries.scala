@@ -528,9 +528,7 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
     // batch-incremental near-dup admission: the portable MinHash chain
     // replayed over the whole table, candidates restricted to
     // (corpus→batch) and (earlier-batch→batch) sides, exact hash-set
-    // Jaccard ≥ 0.6 verify — corpus hit outranks batch hit. The indexed
-    // twin feeds the SAME oracle: only the corpus side's provenance
-    // (stored nearDupIndex tables vs text recompute) differs.
+    // Jaccard ≥ 0.6 verify — corpus hit outranks batch hit.
     Query("d_near_ingest", nearIngestSql)((s, dir) => {
       // batch-incremental NEAR-dup admission (the daily-crawl posture):
       // odd-id docs are the incoming batch, even-id the ingested corpus;
@@ -538,26 +536,16 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       // matches any corpus doc (near_dup_corpus) or any smaller-id batch
       // doc (near_dup_batch) — the at-rest twin of
       // d_dedup_lsh_rebase_stream's resumed index, portable hash family
-      // so the oracle replays signatures → bands → candidates → verify
-      val t = Tables(s, dir)
-      Dedup.incrementalNearIngest(
-        t.documents.filter(col("doc_id") % 2 === 0),
-        t.documents.filter(col("doc_id") % 2 === 1),
-        col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
-    }),
-    Query("d_near_ingest_indexed", nearIngestSql)((s, dir) => {
-      // d_near_ingest's 100 TB plan: the corpus enters as its two STORED
-      // nearDupIndex tables (the (doc_id, band, band_hash) bucket table +
-      // the (doc_id, s) verify table — at scale materialized once and
-      // appended with each admitted batch), never as text. Row-for-row
-      // the recompute form's output (OpsSpec pins equality incl. the
-      // append discipline), so both share one oracle.
+      // so the oracle replays signatures → bands → candidates → verify.
+      // The corpus enters as its two nearDupIndex tables (the (doc_id,
+      // band, band_hash) bucket table + the (doc_id, s) verify table —
+      // at scale materialized once and appended with each admitted
+      // batch), never as text.
       val t = Tables(s, dir)
       val (hx, bx) = Dedup.nearDupIndex(
         t.documents.filter(col("doc_id") % 2 === 0), col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, portableHash = true)
-      Dedup.incrementalNearIngestIndexed(
+      Dedup.incrementalNearIngest(
         hx, bx,
         t.documents.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"),
@@ -1059,12 +1047,13 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
          |SELECT doc_id FROM reps
          |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin)((s, dir) => {
       // end-to-end two-stage removal (exact-collapse → near-dup pairs →
-      // CC → keep canonical): lossless pair mode so the keep-list is
-      // exactly oracle-checkable; the MinHash mode of the same pipeline
-      // is the scale path (ApproxGatesSpec gates its pair recall)
+      // CC → keep canonical): lossless shared-shingle pairs so the
+      // keep-list is exactly oracle-checkable; minhashDedup pairs over
+      // the same reps are the scale path (ApproxGatesSpec gates its
+      // pair recall)
       Dedup
         .dropNearDuplicates(Tables(s, dir).documents, col("doc_id"), col("text"),
-          shingleLen = 3, threshold = 0.6, losslessPairs = true)
+          shingleLen = 3, threshold = 0.6)
         .select(col("doc_id"))
     }),
     Query("d_chunk",
@@ -1145,8 +1134,7 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       Dedup.clusterSizeDistributionFromClusters(
         groups,
         Dedup.connectedComponents(
-          Dedup.nearDupPairs(reps, col("doc_id"), col("text"),
-            shingleLen = 3, threshold = 0.6, losslessPairs = true)))
+          Dedup.ngramJaccardPairs(reps, col("doc_id"), col("text"), 3, 0.6)))
     }),
     Query("d_cluster_sizes_raw", clusterSizesSql)((s, dir) => {
       // the raw-pair-graph form, kept ONLY as the small-scale oracle
@@ -1232,13 +1220,13 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
          |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin)((s, dir) => {
       // near-dup removal with production keep semantics: per cluster keep
       // the highest-token-count doc (tie → min doc_id), not the min-id
-      // one; lossless pair mode so the keep-list is exactly
+      // one; lossless shared-shingle pairs so the keep-list is exactly
       // oracle-checkable
       Dedup
         .dropNearDuplicatesKeepBest(
           Tables(s, dir).documents, col("doc_id"), col("text"),
           quality = TextOps.tokenCount(col("text")),
-          shingleLen = 3, threshold = 0.6, losslessPairs = true)
+          shingleLen = 3, threshold = 0.6)
         .select(col("doc_id"))
     }),
   )

@@ -239,7 +239,7 @@ object PipelineQueries {
       // 16-byte fingerprint set) + min-id within the batch
       val t = Tables(s, dir)
       Dedup.incrementalIngest(
-        t.documents.filter(col("doc_id") % 2 === 0),
+        Dedup.fingerprintSet(t.documents.filter(col("doc_id") % 2 === 0), col("text")),
         t.documents.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"))
     }),
@@ -290,10 +290,15 @@ object PipelineQueries {
       // collapses replica mass BEFORE any signature work, the
       // d_cluster_sizes exact-collapse-first lesson), then the near-dup
       // screen over keepers only. Exact hits verdict 'dup_exact'; the
-      // near stage's verdicts pass through for keepers.
+      // near stage's verdicts pass through for keepers. The corpus
+      // enters as its fingerprint set + nearDupIndex tables.
       val t = Tables(s, dir)
+      val corpus = t.documents.filter(col("doc_id") % 2 === 0)
+      val (hx, bx) = Dedup.nearDupIndex(
+        corpus, col("doc_id"), col("text"),
+        shingleLen = 3, k = 64, bands = 16, portableHash = true)
       Dedup.ingestIncrement(
-        t.documents.filter(col("doc_id") % 2 === 0),
+        Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
@@ -312,29 +317,17 @@ object PipelineQueries {
       // replays every stage — the Gopher keep conjunction, the md5
       // fingerprint keeper, the portable MinHash chain over
       // corpus ∪ keepers, and the 3-gram Jaccard decon sweep — as one
-      // CTE chain with the same verdict precedence.
-      val t = Tables(s, dir)
-      TrainingPipeline.dailyAdmission(
-        t.documents.filter(col("doc_id") % 3 === 0),
-        t.documents.filter(col("doc_id") % 3 === 1),
-        t.documents.filter(col("doc_id") % 3 === 2),
-        col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, nearThreshold = 0.6,
-        deconShingleLen = 3, deconThreshold = 0.5, portableHash = true)
-    }),
-    Query("p_daily_admission_indexed", dailyAdmissionSql)((s, dir) => {
-      // p_daily_admission against STORED corpus artifacts only — the
-      // form the scheduled daily job actually runs: the corpus enters as
-      // its fingerprint set + its two nearDupIndex tables (at scale
+      // CTE chain with the same verdict precedence. The corpus enters as
+      // its STORED artifacts only — the form the scheduled daily job
+      // runs: its fingerprint set + its two nearDupIndex tables (at scale
       // materialized once and appended per admitted batch); corpus TEXT
-      // is never read anywhere in the plan. Same verdicts, one shared
-      // oracle (PipelineSpec pins equality with the recompute form).
+      // is never read by the admission plan itself.
       val t = Tables(s, dir)
       val corpus = t.documents.filter(col("doc_id") % 3 === 0)
       val (hx, bx) = Dedup.nearDupIndex(
         corpus, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, portableHash = true)
-      TrainingPipeline.dailyAdmissionIndexed(
+      TrainingPipeline.dailyAdmission(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 3 === 1),
         t.documents.filter(col("doc_id") % 3 === 2),
@@ -348,34 +341,20 @@ object PipelineQueries {
       // with the frozen benchmark (exactNgramCollisions — one equi-join
       // on portable 32-bit shingle hashes) instead of the Jaccard sweep.
       // Batch twin of the d_decon_hard13_stream screen; same %3 corpus /
-      // batch / benchmark split as p_daily_admission.
-      val t = Tables(s, dir)
-      TrainingPipeline.dailyAdmissionHard13(
-        t.documents.filter(col("doc_id") % 3 === 0),
-        t.documents.filter(col("doc_id") % 3 === 1),
-        t.documents.filter(col("doc_id") % 3 === 2),
-        col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, nearThreshold = 0.6,
-        deconNgram = 13, portableHash = true)
-    }),
-    Query("p_daily_admission_hard13_indexed", dailyAdmissionHard13Sql)((s, dir) => {
-      // the hard-13 ladder the scheduled job runs at 100 TB: stored
-      // corpus artifacts (fp set + nearDupIndex tables — corpus text
-      // never in the plan) AND the bloom-pruned 13-gram screen
-      // (might_contain kills train shingles before any exchange; the
-      // exact join restores exactness). Shares hard13's oracle exactly.
+      // batch / benchmark split and stored corpus artifacts as
+      // p_daily_admission.
       val t = Tables(s, dir)
       val corpus = t.documents.filter(col("doc_id") % 3 === 0)
       val (hx, bx) = Dedup.nearDupIndex(
         corpus, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, portableHash = true)
-      TrainingPipeline.dailyAdmissionHard13Indexed(
+      TrainingPipeline.dailyAdmissionHard13(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 3 === 1),
         t.documents.filter(col("doc_id") % 3 === 2),
         col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, nearThreshold = 0.6,
-        deconNgram = 13, expectedEvalShingles = 400000L, portableHash = true)
+        deconNgram = 13, portableHash = true)
     }),
     // ---- sampling / splitting ----
     Query("p_corpus_report",

@@ -2120,7 +2120,6 @@ ${hllEstimateSelect("window_start")}"""
     Query("q_funnel_stream", funnelStreamSql)((s, dir) => {
       // watermark-driven funnel: each user's row emits (final) once the
       // watermark passes first-view + 1 day; same chain CTEs as q_funnel
-      import s.implicits._
       Replay
         .keyedEvents(keyedEventsFrame(Tables(s, dir))) { stream =>
           StateMachines.funnel(stream, Seq("view", "click", "purchase"), 86400L).toDF()

@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Generic keyed event shape for the stateful operators: the reference's
   * seven input POJOs (SURVEY §1) all collapse to (key, event-time, kind,

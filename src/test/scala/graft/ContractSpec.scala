@@ -28,6 +28,25 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("no two batch queries sharing an oracle plan the same result") {
+    // a second query on one oracle earns its gate time only by running a
+    // different plan; two sameSemantics builders are one query declared twice
+    val dir = "/root/testdata/sf0.001"
+    val groups = SparkEntry.families.flatten.filterNot(_.stream)
+      .groupBy(_.oracleSql).values.filter(_.size > 1).toSeq
+    val twins = groups.flatMap { group =>
+      val plans = group.map(q => q.name -> q(spark, dir))
+      try {
+        plans.tails.toSeq.flatMap {
+          case (a, da) +: rest => rest.collect { case (b, db) if da.sameSemantics(db) => s"$a == $b" }
+          case _ => Nil
+        }
+      } finally spark.catalog.clearCache()
+    }
+    assert(groups.nonEmpty, "no batch queries share an oracle: the check is vacuous")
+    assert(twins.isEmpty, s"same plan declared twice: ${twins.mkString(", ")}")
+  }
+
   test("only GraftSession builds a session") {
     val call = """SparkSession\s*\.\s*builder""".r
     val offenders = Files.walk(Paths.get("src")).iterator().asScala

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests: the scale properties the engine depends
   * on (pushdown, broadcast placement, partial aggregation, windowed top-N

@@ -242,7 +242,8 @@ class RobustnessSpec extends SparkSpec {
 
     // incrementalIngest with an empty corpus admits the whole batch
     val batch = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
-    assert(Dedup.incrementalIngest(emptyDocs, batch, col("doc_id"), col("text")).count() == 2)
+    assert(Dedup.incrementalIngest(Dedup.fingerprintSet(emptyDocs, col("text")),
+      batch, col("doc_id"), col("text")).count() == 2)
 
     // mixtureAllocation with an empty corpus: empty plan, no throw
     assert(Sampling.mixtureAllocation(

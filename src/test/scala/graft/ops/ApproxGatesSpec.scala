@@ -65,8 +65,10 @@ class ApproxGatesSpec extends SparkSpec {
     // per-doc, so split-side computation can't change the pair set.
     val corpus = t.documents.filter(col("doc_id") % 2 === 0)
     val batch = t.documents.filter(col("doc_id") % 2 === 1)
+    val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
+      shingleLen = 3, k = 64, bands = 16, portableHash = true)
     val got = Dedup.incrementalNearIngest(
-        corpus, batch, col("doc_id"), col("text"),
+        hx, bx, batch, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val allPairs = pairs(Dedup.minhashDedup(
@@ -102,8 +104,10 @@ class ApproxGatesSpec extends SparkSpec {
     // admitted or blocked by an EARLIER BATCH doc only, and the empty
     // side must not break the signature/band aggregates
     val batch = t.documents.filter(col("doc_id") % 10 === 0)
+    val (hx, bx) = Dedup.nearDupIndex(t.documents.filter(lit(false)), col("doc_id"),
+      col("text"), shingleLen = 3, k = 64, bands = 16, portableHash = true)
     val got = Dedup.incrementalNearIngest(
-        t.documents.filter(lit(false)), batch, col("doc_id"), col("text"),
+        hx, bx, batch, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size == batch.count(), "one verdict per incoming doc")

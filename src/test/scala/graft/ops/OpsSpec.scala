@@ -329,8 +329,10 @@ class OpsSpec extends SparkSpec {
       (7L, "completely different words about distributed shuffle exchanges"),
       (9L, greek.stripSuffix("pi") + "rho"))
       .toDF("doc_id", "text")
+    val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
+      shingleLen = 3, k = 64, bands = 16, portableHash = true)
     val got = Dedup.ingestIncrement(
-        corpus, batch, col("doc_id"), col("text"),
+        Dedup.fingerprintSet(corpus, col("text")), hx, bx, batch, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
       .as[(Long, String)].collect().toMap
     assert(got == Map(
@@ -341,7 +343,7 @@ class OpsSpec extends SparkSpec {
       9L -> "near_dup_batch"))
   }
 
-  test("incrementalNearIngestIndexed: equals recompute; appended index screens day 2") {
+  test("incrementalNearIngest: appended index screens day 2 like a rebuilt one") {
     val base = "the quick brown fox jumps over the lazy dog"
     val greek = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi"
     val corpus = Seq((0L, base)).toDF("doc_id", "text")
@@ -352,38 +354,33 @@ class OpsSpec extends SparkSpec {
       (7L, "completely different words about distributed shuffle exchanges"),
       (9L, greek.stripSuffix("pi") + "rho"))
       .toDF("doc_id", "text")
+    def index(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
+        shingleLen = 3, k = 64, bands = 16, portableHash = true)
     def screen(hx: org.apache.spark.sql.DataFrame, bx: org.apache.spark.sql.DataFrame,
         batch: org.apache.spark.sql.DataFrame) =
-      Dedup.incrementalNearIngestIndexed(hx, bx, batch, col("doc_id"), col("text"),
+      Dedup.incrementalNearIngest(hx, bx, batch, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
         .as[(Long, String)].collect().toMap
-    val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+    val (hx, bx) = index(corpus)
     val indexed = screen(hx, bx, day1)
-    val recomputed = Dedup.incrementalNearIngest(corpus, day1, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
-      .as[(Long, String)].collect().toMap
-    assert(indexed == recomputed)
     assert(indexed(1L) == "near_dup_corpus" && indexed(5L) == "admitted")
     // day 2: append the admitted day-1 docs' index rows (the per-increment
     // discipline — the corpus is never re-shingled) and screen a new batch;
     // 20 near-dups day-1 admitted doc 5 (now a CORPUS hit), 22 is novel
     val admittedIds = indexed.collect { case (i, "admitted") => i }.toSeq
     val admitted = day1.filter(col("doc_id").isin(admittedIds: _*))
-    val (hA, bA) = Dedup.nearDupIndex(admitted, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+    val (hA, bA) = index(admitted)
     val day2 = Seq(
       (20L, greek.stripSuffix("pi") + "sigma"),
       (22L, "entirely fresh topic sentences regarding columnar storage formats"))
       .toDF("doc_id", "text")
     val got2 = screen(hx.union(hA), bx.union(bA), day2)
     assert(got2 == Map(20L -> "near_dup_corpus", 22L -> "admitted"))
-    // and the appended index equals re-screening against corpus ∪ admitted text
-    val gotText = Dedup.incrementalNearIngest(corpus.union(admitted), day2,
-        col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
-      .as[(Long, String)].collect().toMap
-    assert(got2 == gotText)
+    // and the appended index screens exactly like one rebuilt from
+    // corpus ∪ admitted text
+    val (hU, bU) = index(corpus.union(admitted))
+    assert(got2 == screen(hU, bU, day2))
   }
 
   test("portableShingleHashArray equals portableShingleHashRows (incl. short-doc fallback)") {
@@ -661,10 +658,7 @@ class OpsSpec extends SparkSpec {
     // no per-consumer shingle-explode + self-join recompute.
     val docs = graft.io.Tables(spark, "/root/testdata/sf0.01").documents
     val reps = Dedup.exactRepresentatives(docs, col("doc_id"), col("text"))
-    val pairs = Dedup
-      .nearDupPairs(reps, col("doc_id"), col("text"), shingleLen = 3, threshold = 0.6,
-        losslessPairs = true)
-      .persist()
+    val pairs = Dedup.ngramJaccardPairs(reps, col("doc_id"), col("text"), 3, 0.6).persist()
     try {
       assert(pairs.count() > 0, "composition test is vacuous: no pairs")
       def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
@@ -673,10 +667,10 @@ class OpsSpec extends SparkSpec {
       // shared-frame consumers == the one-shot conveniences, exactly
       assert(ids(Dedup.dropNearDuplicates(reps, col("doc_id"), pairs)) ==
         ids(Dedup.dropNearDuplicates(docs, col("doc_id"), col("text"),
-          shingleLen = 3, threshold = 0.6, losslessPairs = true)))
+          shingleLen = 3, threshold = 0.6)))
       assert(ids(Dedup.dropNearDuplicatesKeepBest(reps, col("doc_id"), qual, pairs)) ==
         ids(Dedup.dropNearDuplicatesKeepBest(docs, col("doc_id"), col("text"), qual,
-          shingleLen = 3, threshold = 0.6, losslessPairs = true)))
+          shingleLen = 3, threshold = 0.6)))
       // deepest composition: ONE CC label table feeds both consumers too
       val cc = Dedup.connectedComponents(pairs).persist()
       try {

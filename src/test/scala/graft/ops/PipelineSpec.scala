@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -89,6 +90,14 @@ class PipelineSpec extends SparkSpec {
     assert(byCluster.count() == docs.count())
   }
 
+  // the stored corpus artifacts the admission ladders screen against —
+  // fingerprint set + the two nearDupIndex tables, at the ladders' params
+  private def artifacts(corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
+      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+    (Dedup.fingerprintSet(corpus, col("text")), hx, bx)
+  }
+
   // 60-token Gopher-passing paragraph: "the <w> and" per theme word keeps
   // every signal inside the keep thresholds (avg token len 4ish, all
   // alphabetic, stopword hits >> 2, no symbols/bullets/ellipses)
@@ -120,8 +129,9 @@ class PipelineSpec extends SparkSpec {
       (13L, para(themeC.init :+ "wheat")), // one word off 10
       (16L, q2)) // clean vs corpus+batch but a copy of the eval doc
       .toDF("doc_id", "text")
+    val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmission(corpusDf, incoming, evalDf, col("doc_id"), col("text"),
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
         portableHash = true)
       .as[(Long, String)].collect().toMap
     assert(got == Map(
@@ -131,16 +141,6 @@ class PipelineSpec extends SparkSpec {
       10L -> "admitted",
       13L -> "near_dup_batch",
       16L -> "contaminated"))
-    // the stored-artifact form sees the corpus only through its
-    // fingerprint set + nearDupIndex tables and lands identical verdicts
-    val (hx, bx) = Dedup.nearDupIndex(corpusDf, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
-    val gotIndexed = TrainingPipeline
-      .dailyAdmissionIndexed(
-        Dedup.fingerprintSet(corpusDf, col("text")), hx, bx,
-        incoming, evalDf, col("doc_id"), col("text"), portableHash = true)
-      .as[(Long, String)].collect().toMap
-    assert(gotIndexed == got)
   }
 
   test("property: dailyAdmission verdicts partition the batch; admits re-screen clean") {
@@ -166,8 +166,9 @@ class PipelineSpec extends SparkSpec {
     val corpusDf = corpusDocs.toDF("doc_id", "text")
     val evalDf = evalDocs.toDF("doc_id", "text")
     val incoming = incomingDocs.toDF("doc_id", "text")
+    val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmission(corpusDf, incoming, evalDf, col("doc_id"), col("text"),
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
         portableHash = true)
       .as[(Long, String)].collect()
     // (a) exactly one verdict per incoming doc, from the declared ladder
@@ -181,7 +182,7 @@ class PipelineSpec extends SparkSpec {
     assert(admittedIds.nonEmpty)
     val admitted = incoming.filter(col("doc_id").isin(admittedIds: _*))
     val rescreen = Dedup.ingestIncrement(
-        corpusDf, admitted, col("doc_id"), col("text"),
+        fps, hx, bx, admitted, col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
       .as[(Long, String)].collect()
     assert(rescreen.forall(_._2 == "admitted"), rescreen.mkString(","))
@@ -217,8 +218,9 @@ class PipelineSpec extends SparkSpec {
     val corpusDf = corpusDocs.toDF("doc_id", "text")
     val evalDf = evalDocs.toDF("doc_id", "text")
     val incoming = incomingDocs.toDF("doc_id", "text")
+    val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmissionHard13(corpusDf, incoming, evalDf, col("doc_id"), col("text"),
+      .dailyAdmissionHard13(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
         portableHash = true)
       .as[(Long, String)].collect()
     // (a) exactly one verdict per incoming doc, from the declared ladder
@@ -234,7 +236,7 @@ class PipelineSpec extends SparkSpec {
     // ...and sails through the Jaccard ladder — the two rules measure
     // different leakage, which is why both are declared
     val jaccard = TrainingPipeline
-      .dailyAdmission(corpusDf, incoming, evalDf, col("doc_id"), col("text"),
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
         portableHash = true)
       .as[(Long, String)].collect().toMap
     assert(jaccard(6040L) == "admitted",
@@ -245,15 +247,15 @@ class PipelineSpec extends SparkSpec {
     val admitted = incoming.filter(col("doc_id").isin(admittedIds: _*))
     assert(Dedup.exactNgramCollisions(
       admitted, evalDf, col("doc_id"), col("text"), 13, portableHash = true).isEmpty)
-    // (d) the stored-artifact + bloom-pruned twin lands identical verdicts
-    val (hx, bx) = Dedup.nearDupIndex(corpusDf, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
-    val gotIndexed = TrainingPipeline
-      .dailyAdmissionHard13Indexed(
-        Dedup.fingerprintSet(corpusDf, col("text")), hx, bx,
-        incoming, evalDf, col("doc_id"), col("text"), portableHash = true)
-      .as[(Long, String)].collect().toMap
-    assert(gotIndexed == byId)
+    // (d) the bloom-pruned 13-gram screen finds exactly the plain
+    // screen's collisions on the same batch (the span leak among them)
+    def hits(df: DataFrame) = df.as[(Long, Long)].collect().toSet
+    val plain = hits(Dedup.exactNgramCollisions(
+      incoming, evalDf, col("doc_id"), col("text"), 13, portableHash = true))
+    assert(plain.exists(_._1 == 6040L), plain.mkString(","))
+    assert(hits(Dedup.exactNgramCollisionsBloom(
+      incoming, evalDf, col("doc_id"), col("text"), 13,
+      expectedEvalShingles = 1000L, portableHash = true)) == plain)
   }
 
   test("zorder2 matches the per-bit reference and nulls out-of-range input") {

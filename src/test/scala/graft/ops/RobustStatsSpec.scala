@@ -113,7 +113,8 @@ class RobustStatsSpec extends SparkSpec {
       (7L, "ddd")) // new unique -> admit
       .toDF("doc_id", "text")
     val got = Dedup
-      .incrementalIngest(corpus, incoming, col("doc_id"), col("text"))
+      .incrementalIngest(
+        Dedup.fingerprintSet(corpus, col("text")), incoming, col("doc_id"), col("text"))
       .select(col("doc_id")).as[Long].collect().toSet
     assert(got == Set(3L, 7L))
   }
@@ -135,8 +136,7 @@ class RobustStatsSpec extends SparkSpec {
     val composed = Dedup.clusterSizeDistributionFromClusters(
       groups,
       Dedup.connectedComponents(
-        Dedup.nearDupPairs(reps, col("doc_id"), col("text"),
-          shingleLen = 1, threshold = 0.5, losslessPairs = true)))
+        Dedup.ngramJaccardPairs(reps, col("doc_id"), col("text"), 1, 0.5)))
       .as[(Long, Long)].collect().toMap
     assert(raw == Map(3L -> 2L))
     assert(composed == raw)
