@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+
 /** The one place a session is built or a session setting is scoped.
   *
   * Local-mode defaults: `local[cpus]` with `cpus` shuffle partitions, where
@@ -39,6 +41,10 @@ object GraftSession {
       // reliable checkpoint() files (the CC loop writes one per round) are
       // deleted once their RDD is GC'd instead of accumulating forever
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      // file: through Hadoop's checksummed local filesystem minus its
+      // chmod/readlink subprocesses (~190 per streaming micro-batch)
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   /** Runs `body` with `confs` set on `spark`, then puts every key back as
     * it was — the previous value, or unset — also when `body` throws.

@@ -256,9 +256,14 @@ object Replay {
     // files + streaming checkpoint). Bench AND Verify set it to a tmpfs
     // (round 13/14) so replays measure the operators, not the host disk's
     // fsync latency (measured swinging 4× under co-tenant I/O while CPU
-    // sat idle — see docs/SCALE.md). Scratch placement cannot change
-    // streaming semantics; checkpoint RECOVERY keeps its own real-disk
-    // specs (CheckpointRecoverySpec).
+    // sat idle — see docs/SCALE.md). The larger fixed cost per micro-batch
+    // was not the disk but process spawns: without libhadoop.so, stock
+    // Hadoop forked ~20 chmod/readlink processes per state partition per
+    // commit, ~190 per batch at 8 partitions with the offset/commit/source
+    // logs, on tmpfs as on disk (~115 ms off-CPU per state task);
+    // GraftSession's graft.io.ForkFreeLocalFs removes them. Scratch
+    // placement cannot change streaming semantics; checkpoint RECOVERY
+    // keeps its own real-disk specs (CheckpointRecoverySpec).
     val tmp = sys.props.get("graft.replay.tmpdir")
       .map(java.nio.file.Paths.get(_))
       .filter(Files.isDirectory(_))

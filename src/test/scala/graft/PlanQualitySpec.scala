@@ -17,6 +17,23 @@ class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.queryExecution.executedPlan.toString
   }
 
+  test("PlanDump.normalize: a plan built after other session work dumps the same text") {
+    def formatted(q: String) = SparkEntry.queries(q)(spark, dir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val first = formatted("q_hot_items")
+    formatted("q_order_timeout") // advances the session's expression and plan counters
+    val again = formatted("q_hot_items")
+    assert(first != again, "the raw dumps carry session counters")
+    assert(PlanDump.normalize(first) == PlanDump.normalize(again))
+    // renumbering keeps distinct ids distinct
+    val ids = (t: String) => "(?<!=)#\\d+".r.findAllIn(t).toSet.size
+    assert(ids(PlanDump.normalize(first)) == ids(first) && ids(first) > 1)
+    // one family per counter: a subquery's [id=#N] is a plan id, not an expression id
+    assert(PlanDump.normalize(
+      "Exchange [plan_id=41] a#7L, Subquery subquery#9, [id=#40] lambda x_12#13 b#7L [plan_id=40]") ==
+      "Exchange [plan_id=0] a#0L, Subquery subquery#1, [id=#1] lambda x_0#2 b#0L [plan_id=1]")
+  }
+
   test("filter and column pruning reach the parquet scan (q_pv_hourly)") {
     val p = plan("q_pv_hourly")
     assert(p.contains("EqualTo(event_type,view)") && p.contains("PushedFilters"),
