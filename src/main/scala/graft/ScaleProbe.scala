@@ -175,14 +175,14 @@ object ScaleProbe {
           graft.io.Tables(s, dir).documents.filter(F.col("doc_id") % 2 === 1),
           graft.io.Tables(s, "/root/testdata/sf0.1").documents
             .filter(F.col("doc_id") % 2 === 0),
-          F.col("doc_id"), F.col("text"), 13, portableHash = true)),
+          F.col("doc_id"), F.col("text"), 13)),
       "probe_hard13_asym_bloom" -> ((s: SparkSession, dir: String) =>
         graft.ops.Dedup.exactNgramCollisionsBloom(
           graft.io.Tables(s, dir).documents.filter(F.col("doc_id") % 2 === 1),
           graft.io.Tables(s, "/root/testdata/sf0.1").documents
             .filter(F.col("doc_id") % 2 === 0),
           F.col("doc_id"), F.col("text"), 13,
-          expectedEvalShingles = 400000L, portableHash = true)),
+          expectedEvalShingles = 400000L)),
       // embedding-decon scale corners: the DECLARED d_decon_embed_lsh
       // params (0.40, 4 planes x 16 tables) are the recall-driven corner
       // for a loose threshold on near-uniform vectors — there the 16-way

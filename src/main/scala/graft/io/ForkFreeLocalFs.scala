@@ -5,6 +5,7 @@ import java.net.URI
 import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermission
 
+import scala.annotation.unused
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -79,7 +80,7 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
   * (a `ChecksumFs`) over [[ForkFreeRawLocalFileSystem]]. Hadoop builds it
   * reflectively through the (URI, Configuration) constructor; like
   * `LocalFs` it ignores the URI. */
-class ForkFreeLocalFs(uri: URI, conf: Configuration)
+class ForkFreeLocalFs(@unused uri: URI, conf: Configuration)
     extends ChecksumFs(new ForkFreeRawLocalFs(conf))
 
 /** Hadoop's `local.RawLocalFs` over [[ForkFreeRawLocalFileSystem]]. */

@@ -17,8 +17,14 @@ import org.apache.spark.sql.functions.udaf
   * `approx_count_distinct` (HLL++) remains the default scale path; this
   * exists for bloom-parity semantics and as the library's typed-Aggregator
   * extension point. Buffer = m bits regardless of cardinality.
+  *
+  * Bit positions use engine-portable double hashing h1 + i·h2
+  * (Kirsch–Mitzenmacher): two 48-bit slices of md5 of the DECIMAL
+  * RENDERING of x — replayable in any SQL engine as
+  * CAST('0x' || substr(md5(CAST(x AS VARCHAR)), 1|13, 12) AS BIGINT),
+  * which is what makes q_uv_daily_bloom oracle-checked (round 9).
   */
-class BloomDistinct(numBits: Int, numHashes: Int, portableHash: Boolean = false)
+class BloomDistinct(numBits: Int, numHashes: Int)
     extends Aggregator[Long, Array[Long], Long] {
   require(Integer.bitCount(numBits) == 1, "numBits must be a power of two")
   private val mask = numBits - 1
@@ -31,32 +37,15 @@ class BloomDistinct(numBits: Int, numHashes: Int, portableHash: Boolean = false)
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
   private def setBit(buf: Array[Long], x: Long): Unit = {
-    var h1 = 0L
-    var h2 = 0L
-    if (portableHash) {
-      // engine-portable double hashing: two 48-bit slices of md5 of the
-      // DECIMAL RENDERING of x — replayable in any SQL engine as
-      // CAST('0x' || substr(md5(CAST(x AS VARCHAR)), 1|13, 12) AS BIGINT),
-      // which is what makes q_uv_daily_bloom oracle-checked (round 9)
-      val hex = mdTl.get().digest(x.toString.getBytes("UTF-8"))
-      def slice48(off: Int): Long = {
-        var v = 0L
-        var i = 0
-        while (i < 6) { v = (v << 8) | (hex(off + i) & 0xffL); i += 1 }
-        v
-      }
-      h1 = slice48(0)
-      h2 = slice48(6) | 1L // odd stride
-    } else {
-      // double hashing h1 + i*h2 (Kirsch–Mitzenmacher); splitmix64
-      // finalizers — the cheap production default
-      var z = x + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      h1 = (z ^ (z >>> 31)).toInt.toLong
-      var w = x * 0x94d049bb133111ebL + 0x2545f4914f6cdd1dL
-      w = (w ^ (w >>> 27)) * 0xff51afd7ed558ccdL
-      h2 = ((w ^ (w >>> 33)).toInt | 1).toLong // odd stride
+    val hex = mdTl.get().digest(x.toString.getBytes("UTF-8"))
+    def slice48(off: Int): Long = {
+      var v = 0L
+      var i = 0
+      while (i < 6) { v = (v << 8) | (hex(off + i) & 0xffL); i += 1 }
+      v
     }
+    val h1 = slice48(0)
+    val h2 = slice48(6) | 1L // odd stride
     var i = 0
     while (i < numHashes) {
       val bit = ((h1 + i * h2) & mask).toInt
@@ -91,13 +80,7 @@ class BloomDistinct(numBits: Int, numHashes: Int, portableHash: Boolean = false)
 object BloomDistinct {
   /** Aggregate column: bloom-estimated distinct count of a long column.
     * Defaults sized for ~100k distinct at <1% collision error.
-    * `portableHash = true` switches to the md5-slice double hashing a SQL
-    * oracle can replay (slower per row; the estimate quality is the same).
     */
-  def bloomDistinct(
-      col: Column,
-      numBits: Int = 1 << 20,
-      numHashes: Int = 4,
-      portableHash: Boolean = false): Column =
-    udaf(new BloomDistinct(numBits, numHashes, portableHash), Encoders.scalaLong).apply(col)
+  def bloomDistinct(col: Column, numBits: Int = 1 << 20, numHashes: Int = 4): Column =
+    udaf(new BloomDistinct(numBits, numHashes), Encoders.scalaLong).apply(col)
 }

@@ -128,7 +128,7 @@ object Dedup {
     * exact Jaccard on the deduped candidate pairs via array intersection.
     *
     * Scale path: the only shuffles are (shingle) and (pair) hash exchanges.
-    * For web-scale corpora, raise `n` or switch to [[minhashCandidates]]
+    * For web-scale corpora, raise `n` or switch to [[minhashDedup]]
     * to cut candidate volume.
     */
   def ngramJaccardPairs(
@@ -502,7 +502,7 @@ object Dedup {
     * streaming query between stateful operators (the admission-gate
     * composition, [[graft.streaming.StreamingDedup.ingestGate]]).
     *
-    * Math is identical to `minhashSignatures(portableHash = true)`:
+    * Math is identical to [[minhashSignatures]]:
     * same whitespace tokens → trigram (whole-text under 3 tokens) →
     * md5-32 shingle hash → splitmix (a,b) universal family mod
     * [[MinhashPrime]] — so signatures, band keys and the SQL oracle all
@@ -558,15 +558,18 @@ object Dedup {
     }
   }
 
-  /** The portable LSH band key over a [[portableMinhashSignature]]
-    * column: md5 of the '|'-joined decimal minima of band `j` — the same
-    * key `minhashDedup(portableHash = true)` buckets on, prefixed with
-    * the band index so it doubles as the streaming index's shard key. */
+  /** The LSH band hash every MinHash path buckets on: md5 of band `j`'s
+    * '|'-joined decimal minima, `minimum(i)` reading the i-th — so
+    * `md5(m0 || '|' || ...)` replays it in SQL. */
+  private[graft] def bandHash(minimum: Int => Column, j: Int, rowsPerBand: Int): Column =
+    md5(concat_ws("|",
+      (j * rowsPerBand until (j + 1) * rowsPerBand).map(i => minimum(i).cast("string")): _*))
+
+  /** The LSH band key over a [[portableMinhashSignature]] column: the
+    * [[bandHash]] [[minhashDedup]] buckets on, prefixed with the band
+    * index so it doubles as the streaming index's shard key. */
   def portableBandKey(sig: Column, j: Int, rowsPerBand: Int): Column =
-    concat_ws("|", lit(j),
-      md5(concat_ws("|",
-        (j * rowsPerBand until (j + 1) * rowsPerBand)
-          .map(i => element_at(sig, i + 1).cast("string")): _*)))
+    concat_ws("|", lit(j), bandHash(i => element_at(sig, i + 1), j, rowsPerBand))
 
   /** Deterministic (a, b) parameters for the k minhash permutations —
     * splitmix64-expanded from a fixed seed so results are reproducible
@@ -587,64 +590,43 @@ object Dedup {
     }
   }
 
+  /** The k-minima signature frame over (doc_id, s) md5→32-bit
+    * shingle-hash rows ([[graft.ops.TextOps.portableShingleHashRows]],
+    * SQL-replayable). Signatures and the exact-Jaccard verify read the
+    * same rows ([[minhashDedup]] persists them once); 32-bit collisions
+    * merge a shingle pair identically on BOTH engines, so the verify
+    * stays record-exact.
+    */
+  private def signaturesFromRows(rows: DataFrame, k: Int, seed: Long): DataFrame = {
+    val params = hashParams(k, seed)
+    rows
+      .groupBy(col("doc_id"))
+      .agg(
+        min(pmod(col("s") * params.head._1 + params.head._2, lit(MinhashPrime))).as("m0"),
+        params.tail.zipWithIndex.map { case ((a, b), i) =>
+          min(pmod(col("s") * a + b, lit(MinhashPrime))).as(s"m${i + 1}")
+        }: _*)
+  }
+
   /** MinHash signatures as one row per doc with k `min` columns m0..m{k-1}.
     *
     * Shape matters for throughput: explode the shingles, hash each ONCE
-    * (`xxhash64` → 32-bit), then take the k permutation minima as k plain
+    * (md5 → 32-bit), then take the k permutation minima as k plain
     * `min` aggregates in a single hash aggregate. This keeps every
     * expression scalar (whole-stage codegen'd; measured ~6× faster than
     * nesting k `array_min(transform(...))` passes over the shingle array,
     * which re-hashes every shingle k times and overflows codegen).
     * One shuffle on doc_id; partial aggregation halves it map-side.
     */
-  /** (doc_id, s) shingle-hash rows in the chosen family, 32-bit reduced
-    * to `h32`. Shared seam: signatures and the exact-Jaccard verify both
-    * read this frame ([[minhashDedup]] persists it once). The portable
-    * family ([[graft.ops.TextOps.portableShingleHashRows]]: md5→32-bit,
-    * SQL-replayable) shares the xxhash path's window-lead plan shape;
-    * 32-bit collisions merge a shingle pair identically on BOTH engines,
-    * so the verify stays record-exact.
-    */
-  private def minhashRows(
-      df: DataFrame, id: Column, text: Column, shingleLen: Int,
-      portableHash: Boolean): DataFrame =
-    if (portableHash) TextOps.portableShingleHashRows(df, id, text, shingleLen)
-    else TextOps.shingleHashRows(df, id, text, shingleLen)
-
-  private def h32Of(portableHash: Boolean): Column =
-    if (portableHash) col("s") // md5-48→8-hex path is already 32-bit
-    else pmod(col("s"), lit(4294967296L))
-
-  private def signaturesFromRows(rows: DataFrame, k: Int, seed: Long): DataFrame = {
-    val params = hashParams(k, seed)
-    rows
-      .groupBy(col("doc_id"))
-      .agg(
-        min(pmod(col("h32") * params.head._1 + params.head._2, lit(MinhashPrime))).as("m0"),
-        params.tail.zipWithIndex.map { case ((a, b), i) =>
-          min(pmod(col("h32") * a + b, lit(MinhashPrime))).as(s"m${i + 1}")
-        }: _*)
-  }
-
   def minhashSignatures(
       df: DataFrame,
       id: Column,
       text: Column,
       shingleLen: Int,
       k: Int,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
-    signaturesFromRows(
-      minhashRows(df, id, text, shingleLen, portableHash)
-        .withColumn("h32", h32Of(portableHash)),
-      k, seed)
+      seed: Long = 42L): DataFrame =
+    signaturesFromRows(TextOps.portableShingleHashRows(df, id, text, shingleLen), k, seed)
 
-  /** LSH candidate pairs: band the k-length signature into `bands` bands of
-    * k/bands minima, bucket-join on (band index, 64-bit band hash) — a
-    * compact long join key instead of array equality. Pairs sharing ≥1 band
-    * are candidates; verification (exact Jaccard) is the caller's choice —
-    * [[minhashDedup]] wires both.
-    */
   /** (doc_id, band, band_hash) rows from a k-minima signature frame —
     * the LSH bucket table. Shared seam: [[candidatesFromSignatures]]
     * self-joins it for at-rest pair dedup; [[incrementalNearIngest]]
@@ -652,28 +634,24 @@ object Dedup {
     * side IS this frame, materialized once and bucketed by
     * (band, band_hash) so each ingest joins without re-shuffling it).
     */
-  private def bandedFromSignatures(
-      sigs: DataFrame, k: Int, bands: Int, portableHash: Boolean): DataFrame = {
+  private def bandedFromSignatures(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    // portable band key: md5 of the '|'-joined minima (decimal-rendered,
-    // so `md5(m0 || '|' || ...)` replays in SQL); production default
-    // stays the cheaper 64-bit xxhash64 long key
-    def bandKey(j: Int): Column =
-      if (portableHash)
-        md5(concat_ws("|", (j * r until (j + 1) * r).map(i => col(s"m$i").cast("string")): _*))
-      else xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*)
     sigs.select(
       col("doc_id"),
-      posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "band_hash")))
+      posexplode(array((0 until bands).map(j => bandHash(i => col(s"m$i"), j, k / bands)): _*))
+        .as(Seq("band", "band_hash")))
   }
 
-  private def candidatesFromSignatures(
-      sigs: DataFrame, k: Int, bands: Int, portableHash: Boolean): DataFrame = {
+  /** LSH candidate pairs: band the k-length signature into `bands` bands
+    * of k/bands minima, bucket-join on (band index, [[bandHash]]). Pairs
+    * sharing ≥1 band are candidates; [[minhashDedup]] verifies them by
+    * exact Jaccard.
+    */
+  private def candidatesFromSignatures(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     // persisted (round-14): the bucket self-join reads the band table on
     // both sides, and each unpersisted side re-ran the k-minima signature
     // aggregate upstream; `bands` small rows per doc
-    val banded = bandedFromSignatures(sigs, k, bands, portableHash).persist()
+    val banded = bandedFromSignatures(sigs, k, bands).persist()
     banded
       .as("l")
       .join(
@@ -684,19 +662,6 @@ object Dedup {
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
       .distinct()
   }
-
-  def minhashCandidates(
-      df: DataFrame,
-      id: Column,
-      text: Column,
-      shingleLen: Int,
-      k: Int,
-      bands: Int,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
-    candidatesFromSignatures(
-      minhashSignatures(df, id, text, shingleLen, k, seed, portableHash),
-      k, bands, portableHash)
 
   /** MinHash-LSH near-dup pairs with exact-Jaccard verification: candidates
     * from banding, then true n-gram Jaccard ≥ threshold on candidates only.
@@ -710,8 +675,7 @@ object Dedup {
       k: Int,
       bands: Int,
       threshold: Double,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     // Verification over exploded shingle-hash rows, not per-doc arrays:
     // joining the candidate pairs through (doc, shingle) rows counts
     // |A∩B| with codegen'd hash joins, where array_intersect over
@@ -721,12 +685,11 @@ object Dedup {
     // ONE persisted hash-row frame feeds BOTH the signature build and the
     // verify joins (the minima over the distinct set equal the minima
     // over the multiset) — previously the tokenize+shingle+hash stage ran
-    // twice, which doubled the md5 cost of the portable family (round 9;
-    // freed by the runner's clearCache).
-    val ex = minhashRows(df, id, text, shingleLen, portableHash).distinct().persist()
+    // twice, which doubled the md5 cost (round 9; freed by the runner's
+    // clearCache).
+    val ex = TextOps.portableShingleHashRows(df, id, text, shingleLen).distinct().persist()
     val nsh = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sigs = signaturesFromRows(ex.withColumn("h32", h32Of(portableHash)), k, seed)
-    candidatesFromSignatures(sigs, k, bands, portableHash)
+    candidatesFromSignatures(signaturesFromRows(ex, k, seed), k, bands)
       .join(ex.select(col("doc_id").as("a"), col("s")), "a")
       .join(ex.select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"))
@@ -789,17 +752,14 @@ object Dedup {
       k: Int,
       bands: Int,
       threshold: Double,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame = {
-    val exB = minhashRows(incoming, id, text, shingleLen, portableHash).distinct().persist()
+      seed: Long = 42L): DataFrame = {
+    val exB = TextOps.portableShingleHashRows(incoming, id, text, shingleLen).distinct().persist()
     // the batch band table feeds THREE join sides (corpus-candidates
     // probe, both sides of the in-batch self-join) and each reference
     // re-runs the k-minima signature aggregate (64 pmod-min columns)
     // above the persisted hash rows — persist the (doc_id, band, hash)
     // rows instead: 16 small rows per batch doc, one signature pass
-    val bndB = bandedFromSignatures(
-      signaturesFromRows(exB.withColumn("h32", h32Of(portableHash)), k, seed),
-      k, bands, portableHash).persist()
+    val bndB = bandedFromSignatures(signaturesFromRows(exB, k, seed), k, bands).persist()
     val candCorpus = corpusBands
       .as("l")
       .join(bndB.as("r"),
@@ -864,13 +824,9 @@ object Dedup {
       shingleLen: Int,
       k: Int,
       bands: Int,
-      seed: Long = 42L,
-      portableHash: Boolean = false): (DataFrame, DataFrame) = {
-    val ex = minhashRows(df, id, text, shingleLen, portableHash).distinct().persist()
-    val bnd = bandedFromSignatures(
-      signaturesFromRows(ex.withColumn("h32", h32Of(portableHash)), k, seed),
-      k, bands, portableHash)
-    (ex, bnd)
+      seed: Long = 42L): (DataFrame, DataFrame) = {
+    val ex = TextOps.portableShingleHashRows(df, id, text, shingleLen).distinct().persist()
+    (ex, bandedFromSignatures(signaturesFromRows(ex, k, seed), k, bands))
   }
 
   /** The composed daily-ingest increment — cheap stage first: exact
@@ -897,14 +853,13 @@ object Dedup {
       k: Int,
       bands: Int,
       threshold: Double,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val keepers = incrementalIngest(corpusFps, incoming, id, text)
       .select(col("doc_id").as("__keep_id"))
     val kept = incoming.join(keepers, id === col("__keep_id"), "left_semi")
     val near = incrementalNearIngest(
       corpusHashes, corpusBands, kept, id, text,
-      shingleLen, k, bands, threshold, seed, portableHash)
+      shingleLen, k, bands, threshold, seed)
     incoming
       .select(id.as("doc_id"))
       .join(near, Seq("doc_id"), "left")
@@ -957,13 +912,13 @@ object Dedup {
     * misses by construction). Complements [[crossCorpusNearDups]]
     * (paraphrase-grade overlap) and the per-doc overlap score
     * (`d_contamination_frac`). Docs shorter than n collapse to one
-    * whole-text shingle (the [[graft.ops.TextOps.shingleHashRows]]
+    * whole-text shingle (the [[graft.ops.TextOps.portableShingleHashRows]]
     * fallback), so short eval items still screen.
     *
     * Returns distinct (train_id, eval_id) collision pairs; semi-join the
     * train side against it to drop.
     *
-    * Scale: shuffle keys are 32/64-bit shingle hashes — the benchmark
+    * Scale: shuffle keys are 32-bit md5 shingle hashes — the benchmark
     * side is tiny, so AQE broadcasts its explode and the train corpus
     * never shuffles (the [[crossCorpusNearDups]] asymmetry note); the
     * bloom-pruned variant composes the same way when even that join is
@@ -974,11 +929,8 @@ object Dedup {
       eval: DataFrame,
       id: Column,
       text: Column,
-      n: Int,
-      portableHash: Boolean = false): DataFrame = {
-    def rows(df: DataFrame) =
-      (if (portableHash) TextOps.portableShingleHashRows(df, id, text, n)
-       else TextOps.shingleHashRows(df, id, text, n)).distinct()
+      n: Int): DataFrame = {
+    def rows(df: DataFrame) = TextOps.portableShingleHashRows(df, id, text, n).distinct()
     rows(train)
       .as("l")
       .join(rows(eval).as("r"), col("l.s") === col("r.s"))
@@ -1005,13 +957,10 @@ object Dedup {
       text: Column,
       n: Int,
       expectedEvalShingles: Long,
-      fpp: Double = 0.01,
-      portableHash: Boolean = false): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.graft.BloomJoinExpressions
     import org.apache.spark.util.sketch.BloomFilter
-    def rows(df: DataFrame) =
-      (if (portableHash) TextOps.portableShingleHashRows(df, id, text, n)
-       else TextOps.shingleHashRows(df, id, text, n)).distinct()
+    def rows(df: DataFrame) = TextOps.portableShingleHashRows(df, id, text, n).distinct()
     val evalEx = rows(eval).persist()
     val numBits = BloomFilter.optimalNumOfBits(expectedEvalShingles, fpp)
     val bits = evalEx
@@ -1606,12 +1555,11 @@ object Dedup {
 
   /** 64-bit SimHash per doc: per bit, sum ±1 votes weighted by token-hash
     * bit, sign → bit. Exploded-aggregate shape for the same codegen reason
-    * as [[minhashSignatures]]: one xxhash64 per distinct token, 64 scalar
+    * as [[minhashSignatures]]: one md5 per distinct token, 64 scalar
     * conditional sums in a single hash aggregate (vs 64 interpreter passes
     * over a per-row array), then OR the sign bits back into one long.
     */
-  def simhashDocs(
-      df: DataFrame, id: Column, text: Column, portableHash: Boolean = false): DataFrame = {
+  def simhashDocs(df: DataFrame, id: Column, text: Column): DataFrame = {
     // Lane-packed vote counting: 16 sums of 4×16-bit lanes instead of 64
     // single-bit sums (4× fewer aggregate updates). Lane j of sum g counts
     // tokens whose hash bit (g + 16·j) is set; no cross-lane carry while a
@@ -1619,21 +1567,15 @@ object Dedup {
     // tokens are distinct'd first). Bit set in the final hash iff set-count
     // · 2 > n, identical to the ±1-vote sign rule.
     //
-    // portableHash: token-hash bit b = bit (b % 4) of the md5 hex
-    // nibble b/4 — a convention a SQL oracle replays verbatim
-    // (`('0x' || substr(md5(t), b//4 + 1, 1))::BIGINT >> (b % 4) & 1`);
-    // xxhash64 stays the cheaper production default.
-    val base0 = df.select(id.as("doc_id"), explode(array_distinct(TextOps.tokens(text))).as("t"))
-    val (base, bitOf) =
-      if (portableHash) {
-        val b0 = base0.withColumn("__hex", md5(col("t")))
-        def nib(n: Int): Column =
-          conv(substring(col("__hex"), n + 1, 1), 16, 10).cast("long")
-        (b0, (b: Int) => shiftright(nib(b / 4), b % 4).bitwiseAND(1L))
-      } else {
-        val b0 = base0.withColumn("h", xxhash64(col("t")))
-        (b0, (b: Int) => shiftrightunsigned(col("h"), b).bitwiseAND(1L))
-      }
+    // Token-hash bit b = bit (b % 4) of the md5 hex nibble b/4 — a
+    // convention a SQL oracle replays verbatim
+    // (`('0x' || substr(md5(t), b//4 + 1, 1))::BIGINT >> (b % 4) & 1`).
+    val base = df
+      .select(id.as("doc_id"), explode(array_distinct(TextOps.tokens(text))).as("t"))
+      .withColumn("__hex", md5(col("t")))
+    def bitOf(b: Int): Column =
+      shiftright(conv(substring(col("__hex"), b / 4 + 1, 1), 16, 10).cast("long"), b % 4)
+        .bitwiseAND(1L)
     val votes = base
       .groupBy(col("doc_id"))
       .agg(
@@ -1664,12 +1606,11 @@ object Dedup {
       df: DataFrame,
       id: Column,
       text: Column,
-      maxHamming: Int,
-      portableHash: Boolean = false): DataFrame = {
+      maxHamming: Int): DataFrame = {
     // persisted (round-14): one (doc_id, sh) row per doc, read by both
     // sides of the band self-join — unpersisted, the 64-bit-vote
     // aggregation (16 packed sums over every token) executed twice
-    val docs = simhashDocs(df, id, text, portableHash).persist()
+    val docs = simhashDocs(df, id, text).persist()
     val banded = docs.select(
       col("doc_id"),
       col("sh"),

@@ -41,17 +41,17 @@ object Similarity {
     * array<double>. The queries side is broadcast (small probe set against
     * a huge corpus is the common shape), so the scan over the corpus is a
     * single pass with no shuffle until the per-query top-k aggregation —
-    * which carries only k·|queries| rows.
+    * which carries only k·|queries| rows. A query is never its own
+    * neighbour, here and in the approximate top-k functions below.
     */
   def bruteForceTopK(
       corpus: DataFrame,
       queries: DataFrame,
-      k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val c = corpus.select(col("id").as("nbr_id"), col("vec").cast("array<double>").as("nbr_vec"))
     val q = queries.select(col("id").as("query_id"), col("vec").cast("array<double>").as("q_vec"))
     val joined = c
-      .join(broadcast(q), if (excludeSelf) col("query_id") =!= col("nbr_id") else lit(true))
+      .join(broadcast(q), col("query_id") =!= col("nbr_id"))
       .withColumn("sim", quantize(cosine(col("q_vec"), col("nbr_vec"))))
     TopN
       .perPartition(
@@ -260,9 +260,7 @@ object Similarity {
       queries: DataFrame,
       nLists: Int,
       nProbe: Int,
-      k: Int,
-      seed: Long = 42L,
-      excludeSelf: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val c = corpus.select(col("id").as("nbr_id"), col("vec").cast("array<double>").as("nbr_vec"))
     val centDf = fitCentroids(c, "nbr_id", "nbr_vec", nLists)
 
@@ -271,7 +269,7 @@ object Similarity {
     val probes = nearestLists(centDf)(q, "query_id", "q_vec", nProbe)
     val joined = probes
       .join(listed, "list_id")
-      .filter(if (excludeSelf) col("query_id") =!= col("nbr_id") else lit(true))
+      .filter(col("query_id") =!= col("nbr_id"))
       .withColumn("sim", quantize(cosine(col("q_vec"), col("nbr_vec"))))
     TopN
       .perPartition(joined, Seq(col("query_id")), Seq(col("sim").desc, col("nbr_id").asc), k)
@@ -333,8 +331,7 @@ object Similarity {
       nCentroids: Int,
       k: Int,
       refine: Int = 4,
-      fitSample: Int = 2048,
-      excludeSelf: Boolean = true): DataFrame = {
+      fitSample: Int = 2048): DataFrame = {
     def unit(v: Column): Column = unitNorm(v)
     val c = corpus.select(
       col("id").as("nbr_id"),
@@ -371,7 +368,7 @@ object Similarity {
       col("query_id"), col("q_vec"),
       array((0 until m).map(lutCol): _*).as("lut")) // |queries| rows: HOFs fine here
     val adc = codes
-      .join(broadcast(qLut), if (excludeSelf) col("query_id") =!= col("nbr_id") else lit(true))
+      .join(broadcast(qLut), col("query_id") =!= col("nbr_id"))
       .withColumn(
         "__adc",
         org.apache.spark.sql.graft.VectorFunctions.adcScore(col("lut"), col("codes")))
@@ -523,16 +520,14 @@ object Similarity {
       queries: DataFrame,
       dim: Int,
       k: Int,
-      rerank: Int = 8,
-      excludeSelf: Boolean = true): DataFrame = {
+      rerank: Int = 8): DataFrame = {
     require(k > 0 && rerank > 0, "need positive k and rerank")
     val c = corpus.select(col("id").as("nbr_id"), col("vec").cast("array<double>").as("nbr_vec"))
     val q = queries.select(col("id").as("query_id"), col("vec").cast("array<double>").as("q_vec"))
     val cCodes = c.select(col("nbr_id"), signBitCode(col("nbr_vec"), dim).as("nbr_code"))
     val qCodes = q.select(col("query_id"), signBitCode(col("q_vec"), dim).as("q_code"))
     val scanned = cCodes
-      .join(broadcast(qCodes),
-        if (excludeSelf) col("query_id") =!= col("nbr_id") else lit(true))
+      .join(broadcast(qCodes), col("query_id") =!= col("nbr_id"))
       .withColumn("ham",
         aggregate(
           zip_with(col("q_code"), col("nbr_code"),
@@ -748,8 +743,7 @@ object Similarity {
       df: DataFrame,
       threshold: Double,
       nClusters: Int,
-      nProbe: Int = 2,
-      seed: Long = 42L): DataFrame = {
+      nProbe: Int = 2): DataFrame = {
     val v = df.select(col("id"), col("vec").cast("array<double>").as("v"))
     val assigned =
       if (nClusters == 1) v.select(col("id"), lit(0).as("list_id"))

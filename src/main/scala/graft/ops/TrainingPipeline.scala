@@ -186,12 +186,11 @@ object TrainingPipeline {
       nearThreshold: Double = 0.6,
       deconShingleLen: Int = 3,
       deconThreshold: Double = 0.5,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
+      seed: Long = 42L): DataFrame =
     admissionLadder(incoming)({ passed =>
       Dedup.ingestIncrement(
         corpusFps, corpusHashes, corpusBands, passed, id, text,
-        shingleLen, k, bands, nearThreshold, seed, portableHash)
+        shingleLen, k, bands, nearThreshold, seed)
     }, { admitted =>
       Dedup
         .crossCorpusNearDups(admitted, evalSet, id, text, deconShingleLen, deconThreshold)
@@ -221,14 +220,13 @@ object TrainingPipeline {
       bands: Int = 16,
       nearThreshold: Double = 0.6,
       deconNgram: Int = 13,
-      seed: Long = 42L,
-      portableHash: Boolean = false): DataFrame =
+      seed: Long = 42L): DataFrame =
     admissionLadder(incoming)({ passed =>
       Dedup.ingestIncrement(
         corpusFps, corpusHashes, corpusBands, passed, id, text,
-        shingleLen, k, bands, nearThreshold, seed, portableHash)
+        shingleLen, k, bands, nearThreshold, seed)
     }, { admitted =>
-      Dedup.exactNgramCollisions(admitted, evalSet, id, text, deconNgram, portableHash = true)
+      Dedup.exactNgramCollisions(admitted, evalSet, id, text, deconNgram)
         .select(col("train_id").as("doc_id"))
     }, id, text)
 

@@ -251,11 +251,8 @@ object WindowAggs {
       distinctCol: Column,
       numBits: Int = 1 << 20,
       keys: Seq[Column] = Nil,
-      countName: String = "uv_bloom",
-      portableHash: Boolean = false): DataFrame =
+      countName: String = "uv_bloom"): DataFrame =
     flatten(
       df.groupBy(window(ts, size) +: keys: _*)
-        .agg(BloomDistinct
-          .bloomDistinct(distinctCol, numBits, portableHash = portableHash)
-          .as(countName)))
+        .agg(BloomDistinct.bloomDistinct(distinctCol, numBits).as(countName)))
 }

@@ -24,12 +24,11 @@ object DedupQueries {
     * exactly. Shared by the fresh-index and rebased-index declarations.
     */
   private def bandedDocEvents(s: SparkSession, dir: String): DataFrame = {
-    val sigs = graft.ops.Dedup.minhashSignatures(
+    val sigs = Dedup.minhashSignatures(
       Tables(s, dir).documents, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, portableHash = true)
-    def bandKey(j: Int): Column = concat_ws("|", lit(j),
-      md5(concat_ws("|",
-        (4 * j until 4 * j + 4).map(i => col(s"m$i").cast("string")): _*)))
+      shingleLen = 3, k = 64)
+    def bandKey(j: Int): Column =
+      concat_ws("|", lit(j), Dedup.bandHash(i => col(s"m$i"), j, rowsPerBand = 4))
     sigs.select(
       col("doc_id"),
       explode(array((0 until 16).map(bandKey): _*)).as("key"),
@@ -544,12 +543,12 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       val t = Tables(s, dir)
       val (hx, bx) = Dedup.nearDupIndex(
         t.documents.filter(col("doc_id") % 2 === 0), col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16)
       Dedup.incrementalNearIngest(
         hx, bx,
         t.documents.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
     }),
     // ---- dedup (training-data pipeline) ----
     Query("d_dedup_exact",
@@ -577,12 +576,12 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       // md5-based base/band hashes the oracle SQL replays signature
       // minima, banding, candidate join, AND exact-Jaccard verify
       // (minhashSql embeds the splitmix (a,b) permutation params as
-      // literals; xxhash64 stays the cheaper production default).
+      // literals).
       // Acceptance bar (ApproxGatesSpec, same params, sf0.01): output ⊆
       // d_dedup_ngram (exact-Jaccard verify ⇒ precision 1) and pair recall
       // ≥ 0.9 vs the lossless ngram pairs (measured 1.0).
       Dedup.minhashDedup(Tables(s, dir).documents, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
     }),
     Query("d_dedup_lsh_stream", lshStreamSql)((s, dir) => {
       // streaming admission-time near-dup: an accumulating MinHash-LSH
@@ -662,13 +661,12 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       // ORACLE-CHECKED since round 9: SimHash is a deterministic function
       // of the token-hash family, so with the portable md5-nibble token
       // hash the oracle SQL replays per-bit votes, the 4×16-bit banding,
-      // and the hamming verify (simhashSql; xxhash64 stays the cheaper
-      // production default). Acceptance bar (ApproxGatesSpec, sf0.01):
-      // 4×16-bit band blocking is LOSSLESS for hamming ≤ 3 (pigeonhole:
-      // ≤3 flipped bits leave ≥1 of 4 bands exact), so output ≡
-      // brute-force all-pairs — asserted as set equality.
-      Dedup.simhashPairs(Tables(s, dir).documents, col("doc_id"), col("text"),
-        maxHamming = 3, portableHash = true)
+      // and the hamming verify (simhashSql). Acceptance bar
+      // (ApproxGatesSpec, sf0.01): 4×16-bit band blocking is LOSSLESS for
+      // hamming ≤ 3 (pigeonhole: ≤3 flipped bits leave ≥1 of 4 bands
+      // exact), so output ≡ brute-force all-pairs — asserted as set
+      // equality.
+      Dedup.simhashPairs(Tables(s, dir).documents, col("doc_id"), col("text"), maxHamming = 3)
     }),
     Query("d_dedup_embed",
       """WITH v AS (
@@ -918,7 +916,7 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
       Dedup.exactNgramCollisions(
         docs.filter(col("doc_id") % 2 === 1),
         docs.filter(col("doc_id") % 2 === 0),
-        col("doc_id"), col("text"), n = 13, portableHash = true)
+        col("doc_id"), col("text"), n = 13)
     }),
     Query("d_decontaminate_hard13_bloom", hard13Sql)((s, dir) => {
       // hard13's 100 TB sweep plan: the train explode filters through a
@@ -931,7 +929,7 @@ SELECT a, b, sim FROM scored WHERE sim >= 4000"""
         docs.filter(col("doc_id") % 2 === 1),
         docs.filter(col("doc_id") % 2 === 0),
         col("doc_id"), col("text"), n = 13,
-        expectedEvalShingles = 200000L, portableHash = true)
+        expectedEvalShingles = 200000L)
     }),
     Query("d_decon_hard13_stream", hard13Sql)((s, dir) => {
       // the hard sweep riding the ingest stream: odd-id docs arrive in

@@ -296,12 +296,12 @@ object PipelineQueries {
       val corpus = t.documents.filter(col("doc_id") % 2 === 0)
       val (hx, bx) = Dedup.nearDupIndex(
         corpus, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16)
       Dedup.ingestIncrement(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
     }),
     // the full daily admission replayed end-to-end: Gopher keep
     // conjunction over the incoming third, md5 fingerprint keeper, the
@@ -326,14 +326,14 @@ object PipelineQueries {
       val corpus = t.documents.filter(col("doc_id") % 3 === 0)
       val (hx, bx) = Dedup.nearDupIndex(
         corpus, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16)
       TrainingPipeline.dailyAdmission(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 3 === 1),
         t.documents.filter(col("doc_id") % 3 === 2),
         col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, nearThreshold = 0.6,
-        deconShingleLen = 3, deconThreshold = 0.5, portableHash = true)
+        deconShingleLen = 3, deconThreshold = 0.5)
     }),
     Query("p_daily_admission_hard13", dailyAdmissionHard13Sql)((s, dir) => {
       // the admission ladder with GPT-3's decontamination rule: the
@@ -347,14 +347,14 @@ object PipelineQueries {
       val corpus = t.documents.filter(col("doc_id") % 3 === 0)
       val (hx, bx) = Dedup.nearDupIndex(
         corpus, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16)
       TrainingPipeline.dailyAdmissionHard13(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx,
         t.documents.filter(col("doc_id") % 3 === 1),
         t.documents.filter(col("doc_id") % 3 === 2),
         col("doc_id"), col("text"),
         shingleLen = 3, k = 64, bands = 16, nearThreshold = 0.6,
-        deconNgram = 13, portableHash = true)
+        deconNgram = 13)
     }),
     // ---- sampling / splitting ----
     Query("p_corpus_report",

@@ -494,11 +494,9 @@ ${hllEstimateSelect("window_start")}"""
       // typed Aggregator. ORACLE-CHECKED since round 9: the bitmap is a
       // pure function of the distinct-user SET (bit-OR is merge-order
       // independent) and the portable md5 double hashing lets the oracle
-      // SQL replay every bit and the fill-ratio estimate exactly; the
-      // splitmix default stays the production hash.
+      // SQL replay every bit and the fill-ratio estimate exactly.
       WindowAggs.tumblingBloomDistinct(
-        Tables(s, dir).events, col("ts"), "1 day", col("user_id"),
-        portableHash = true)
+        Tables(s, dir).events, col("ts"), "1 day", col("user_id"))
     }),
     Query("q_channel_stats", channelStatsSql)((s, dir) => {
       // A5: per-(channel,behavior) daily counts (channelApp, intended
@@ -574,9 +572,7 @@ ${hllEstimateSelect("window_start")}"""
           Tables(s, dir).events.select(
             lit("all").as("key"), col("ts"), lit("e").as("kind"),
             col("user_id").cast("string").as("id"))) { stream =>
-          WindowTriggers
-            .fireAndPurgeCount(stream, "e", sizeSec = 3600L, distinctOnId = true)
-            .toDF()
+          WindowTriggers.fireAndPurgeCount(stream, "e", sizeSec = 3600L).toDF()
         }
         .groupBy(col("window_start"))
         .agg(max(col("cnt")).as("uv"))

@@ -40,30 +40,4 @@ object StreamJoins {
           col(rTs) <= col(lTs) + expr(s"INTERVAL $upperSec seconds"),
         "inner")
   }
-
-  /** Streaming full-outer reconciliation — the watermark-bounded join form
-    * of reference J2: matched rows carry both sides; once the watermark
-    * passes a row's match horizon, Spark emits it with nulls on the other
-    * side — the "Payed No Receipt" / "No Payed But Receipt" side outputs
-    * as null-pattern rows. For exact Flink side-output parity (tagged
-    * rows), use [[StateMachines.reconcile]] instead.
-    */
-  def reconcileJoin(
-      left: DataFrame,
-      right: DataFrame,
-      leftWatermark: (String, String),
-      rightWatermark: (String, String),
-      joinOn: org.apache.spark.sql.Column,
-      toleranceSec: Long): DataFrame = {
-    val (lTs, lDelay) = leftWatermark
-    val (rTs, rDelay) = rightWatermark
-    left
-      .withWatermark(lTs, lDelay)
-      .join(
-        right.withWatermark(rTs, rDelay),
-        joinOn &&
-          col(rTs) >= col(lTs) - expr(s"INTERVAL $toleranceSec seconds") &&
-          col(rTs) <= col(lTs) + expr(s"INTERVAL $toleranceSec seconds"),
-        "full_outer")
-  }
 }

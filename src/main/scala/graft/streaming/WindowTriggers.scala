@@ -40,8 +40,8 @@ case class LateFire(key: String, window_start: Timestamp, cnt: Long, firing: Str
   *    purged at window end + lateness.
   *
   * Scale: state is partitioned by key hash like every stateful op; per key
-  * it is O(open windows) counters — for [[fireAndPurgeCount]] in distinct
-  * mode it is O(distinct ids per open window) (the reference holds exactly
+  * it is O(open windows) counters — for [[fireAndPurgeCount]] it is
+  * O(distinct ids per open window) (the reference holds exactly
   * this in a Redis bitmap; the bounded-memory scale path for global UV
   * remains A8's HLL++, `graft.ops.WindowAggs.tumblingApproxDistinct`).
   * Emission volume is one row per input element — pane firing is a serving
@@ -50,19 +50,18 @@ case class LateFire(key: String, window_start: Timestamp, cnt: Long, firing: Str
   */
 object WindowTriggers {
 
-  /** Tumbling-window count (or distinct-id count) with FIRE_AND_PURGE
-    * firing: every element of `matchKind` emits the pane's updated
-    * aggregate immediately. In `distinctOnId` mode a duplicate id still
-    * fires (the reference's trigger fires unconditionally per element) but
-    * leaves the count unchanged, so `max(cnt)` per (key, window) is the
-    * exact windowed (distinct) count — the batch-equivalence the
-    * q_uv_pane_stream correctness row checks.
+  /** Tumbling-window distinct-id count with FIRE_AND_PURGE firing: every
+    * element of `matchKind` emits the pane's updated aggregate
+    * immediately. A duplicate id still fires (the reference's trigger
+    * fires unconditionally per element) but leaves the count unchanged,
+    * so `max(cnt)` per (key, window) is the exact windowed distinct
+    * count — the batch-equivalence the q_uv_pane_stream correctness row
+    * checks.
     */
   def fireAndPurgeCount(
       events: Dataset[KeyedEvent],
       matchKind: String,
       sizeSec: Long,
-      distinctOnId: Boolean = false,
       watermarkDelay: String = "0 seconds"): Dataset[PaneFire] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -80,13 +79,11 @@ object WindowTriggers {
           val ws = Math.floorDiv(usOf(e.ts), sizeUs) * sizeUs
           if (ws + sizeUs > wmUs) { // a purged pane never resurrects
             val seenKey = s"$ws|${e.id}"
-            if (distinctOnId && st.seen.contains(seenKey))
+            if (st.seen.contains(seenKey))
               out += PaneFire(key, tsOf(ws), st.cnt(ws), e.ts) // fire, unchanged
             else {
               val n = st.cnt.getOrElse(ws, 0L) + 1L
-              st = PaneState(
-                st.cnt.updated(ws, n),
-                if (distinctOnId) st.seen + seenKey else st.seen)
+              st = PaneState(st.cnt.updated(ws, n), st.seen + seenKey)
               out += PaneFire(key, tsOf(ws), n, e.ts)
             }
           }
@@ -95,9 +92,7 @@ object WindowTriggers {
         val live = st.cnt.filter { case (ws, _) => ws + sizeUs > wmUs }
         if (live.isEmpty) state.remove()
         else {
-          val liveSeen =
-            if (distinctOnId) st.seen.filter(sk => live.contains(sk.takeWhile(_ != '|').toLong))
-            else st.seen
+          val liveSeen = st.seen.filter(sk => live.contains(sk.takeWhile(_ != '|').toLong))
           state.update(PaneState(live, liveSeen))
           // ceil to ms so the purge timer never fires before the us deadline
           state.setTimeoutTimestamp((live.keys.map(_ + sizeUs).min + 999L) / 1000L)
@@ -106,7 +101,7 @@ object WindowTriggers {
       })
   }
 
-  /** Panes per window start: running counts, and in distinct mode the
+  /** Panes per window start: running counts and the
     * `"windowStartUs|id"` membership set (the Redis bitmap's role).
     */
   case class PaneState(cnt: Map[Long, Long], seen: Set[String])

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.io.Tables
 
 /** Deterministic acceptance gates for the `no_oracle` approximate
@@ -31,11 +31,15 @@ class ApproxGatesSpec extends SparkSpec {
   private def recall(got: Set[(Long, Long)], truth: Set[(Long, Long)]): Double =
     if (truth.isEmpty) 1.0 else (got & truth).size.toDouble / truth.size
 
+  /** The declared query's output — the gate reads what the query runs,
+    * so its parameters cannot drift from the gate's. */
+  private def declared(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
+
   test("d_dedup_simhash: 4x16-bit banding == brute-force hamming<=3 (set equality)") {
     // Pigeonhole: <=3 flipped bits leave >=1 of the 4 16-bit bands exact,
     // so the banded blocking is lossless — asserted as strict equality,
     // not a recall floor.
-    val banded = pairs(Dedup.simhashPairs(t.documents, col("doc_id"), col("text"), 3))
+    val banded = pairs(declared("d_dedup_simhash"))
     val sh = Dedup.simhashDocs(t.documents, col("doc_id"), col("text"))
     val brute = pairs(
       sh.as("l")
@@ -47,11 +51,8 @@ class ApproxGatesSpec extends SparkSpec {
   }
 
   test("d_dedup_minhash: output subset of lossless ngram pairs, recall >= 0.9") {
-    // SparkEntry params: shingleLen=3, k=64, bands=16, threshold=0.6
     val truth = pairs(Dedup.ngramJaccardPairs(t.documents, col("doc_id"), col("text"), 3, 0.6))
-    val got = pairs(Dedup.minhashDedup(
-      t.documents, col("doc_id"), col("text"), shingleLen = 3, k = 64, bands = 16,
-      threshold = 0.6))
+    val got = pairs(declared("d_dedup_minhash"))
     assert(truth.nonEmpty, "gate is vacuous: no ngram pairs in testdata")
     assert(got.subsetOf(truth), s"precision violated: ${(got -- truth).take(5)}")
     assert(recall(got, truth) >= 0.9, s"recall ${recall(got, truth)} < 0.9")
@@ -66,14 +67,14 @@ class ApproxGatesSpec extends SparkSpec {
     val corpus = t.documents.filter(col("doc_id") % 2 === 0)
     val batch = t.documents.filter(col("doc_id") % 2 === 1)
     val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+      shingleLen = 3, k = 64, bands = 16)
     val got = Dedup.incrementalNearIngest(
         hx, bx, batch, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val allPairs = pairs(Dedup.minhashDedup(
       t.documents, col("doc_id"), col("text"), shingleLen = 3, k = 64, bands = 16,
-      threshold = 0.6, portableHash = true))
+      threshold = 0.6))
     val batchIds = batch.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val expected = batchIds.map { b =>
       val corpusHit = allPairs.exists { case (x, y) =>
@@ -105,10 +106,10 @@ class ApproxGatesSpec extends SparkSpec {
     // side must not break the signature/band aggregates
     val batch = t.documents.filter(col("doc_id") % 10 === 0)
     val (hx, bx) = Dedup.nearDupIndex(t.documents.filter(lit(false)), col("doc_id"),
-      col("text"), shingleLen = 3, k = 64, bands = 16, portableHash = true)
+      col("text"), shingleLen = 3, k = 64, bands = 16)
     val got = Dedup.incrementalNearIngest(
         hx, bx, batch, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size == batch.count(), "one verdict per incoming doc")
     assert(!got.valuesIterator.contains("near_dup_corpus"),
@@ -193,13 +194,10 @@ class ApproxGatesSpec extends SparkSpec {
     gate("hll", WindowAggs
       .tumblingApproxDistinct(t.events, col("ts"), "1 day", col("user_id"))
       .select(col("window_start"), col("uv_approx")))
-    gate("bloom", WindowAggs
-      .tumblingBloomDistinct(t.events, col("ts"), "1 day", col("user_id"))
-      .select(col("window_start"), col("uv_bloom")))
-    // the round-10 DECLARED path: portable-register HLL (oracle-checked
-    // for replay equality; this gate is the accuracy bar)
-    gate("portable-hll", graft.SparkEntry.queries("q_uv_daily_approx")(spark, dir)
-      .select(col("window_start"), col("uv_est")))
+    // the DECLARED paths: md5 bloom bitmap and portable-register HLL
+    // (oracle-checked for replay equality; this gate is the accuracy bar)
+    gate("bloom", declared("q_uv_daily_bloom").select(col("window_start"), col("uv_bloom")))
+    gate("portable-hll", declared("q_uv_daily_approx").select(col("window_start"), col("uv_est")))
   }
 
   test("q_uv_sketch: per-type sketch-union estimate within 5% of exact distinct") {
@@ -227,7 +225,7 @@ class ApproxGatesSpec extends SparkSpec {
     // the streamed daily sketches union to bit-identical estimates; any
     // divergence means the stream dropped/duplicated rows or bucketed a
     // day differently
-    def rows(q: String) = graft.SparkEntry.queries(q)(spark, dir)
+    def rows(q: String) = declared(q)
       .select(col("key"), col("n_buckets"), col("uv_est").cast("double"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     val batch = rows("q_uv_sketch")
@@ -240,9 +238,9 @@ class ApproxGatesSpec extends SparkSpec {
     // the daily-sketch union must cover exactly the exact query's window
     // set (every 7d/1d window any event touches) and estimate each
     // window's true distinct within HLL lgK=12 accuracy
-    val exact = graft.SparkEntry.queries("q_wau")(spark, dir)
+    val exact = declared("q_wau")
       .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toMap
-    val est = graft.SparkEntry.queries("q_wau_sketch")(spark, dir)
+    val est = declared("q_wau_sketch")
       .select(col("window_start"), col("uv_est").cast("double"))
       .collect().map(r => (r.getTimestamp(0), r.getDouble(1))).toMap
     assert(est.keySet == exact.keySet)

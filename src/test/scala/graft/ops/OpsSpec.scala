@@ -330,10 +330,10 @@ class OpsSpec extends SparkSpec {
       (9L, greek.stripSuffix("pi") + "rho"))
       .toDF("doc_id", "text")
     val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+      shingleLen = 3, k = 64, bands = 16)
     val got = Dedup.ingestIncrement(
         Dedup.fingerprintSet(corpus, col("text")), hx, bx, batch, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
       .as[(Long, String)].collect().toMap
     assert(got == Map(
       1L -> "dup_exact",
@@ -356,11 +356,11 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def index(docs: org.apache.spark.sql.DataFrame) =
       Dedup.nearDupIndex(docs, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16)
     def screen(hx: org.apache.spark.sql.DataFrame, bx: org.apache.spark.sql.DataFrame,
         batch: org.apache.spark.sql.DataFrame) =
       Dedup.incrementalNearIngest(hx, bx, batch, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
         .as[(Long, String)].collect().toMap
     val (hx, bx) = index(corpus)
     val indexed = screen(hx, bx, day1)
@@ -413,7 +413,7 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val got = Dedup.exactNgramCollisions(
         df.filter(col("doc_id") % 2 === 1), df.filter(col("doc_id") % 2 === 0),
-        col("doc_id"), col("text"), n = 13, portableHash = true)
+        col("doc_id"), col("text"), n = 13)
       .as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 0L)))
   }
@@ -473,7 +473,7 @@ class OpsSpec extends SparkSpec {
     val noEval = train.filter(lit(false))
     val hard = Dedup.exactNgramCollisionsBloom(
       train, noEval, col("doc_id"), col("text"), n = 13,
-      expectedEvalShingles = 100L, portableHash = true)
+      expectedEvalShingles = 100L)
     assert(hard.isEmpty && hard.columns.toSeq == Seq("train_id", "eval_id"))
     val near = Dedup.crossCorpusNearDupsBloom(
       train, noEval, col("doc_id"), col("text"), n = 3, threshold = 0.5,

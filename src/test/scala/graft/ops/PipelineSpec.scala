@@ -94,7 +94,7 @@ class PipelineSpec extends SparkSpec {
   // fingerprint set + the two nearDupIndex tables, at the ladders' params
   private def artifacts(corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val (hx, bx) = Dedup.nearDupIndex(corpus, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, bands = 16, portableHash = true)
+      shingleLen = 3, k = 64, bands = 16)
     (Dedup.fingerprintSet(corpus, col("text")), hx, bx)
   }
 
@@ -131,8 +131,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
-        portableHash = true)
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"))
       .as[(Long, String)].collect().toMap
     assert(got == Map(
       1L -> "rejected_quality",
@@ -168,8 +167,7 @@ class PipelineSpec extends SparkSpec {
     val incoming = incomingDocs.toDF("doc_id", "text")
     val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
-        portableHash = true)
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"))
       .as[(Long, String)].collect()
     // (a) exactly one verdict per incoming doc, from the declared ladder
     assert(got.map(_._1).sorted.toSeq == incomingDocs.map(_._1).sorted)
@@ -183,7 +181,7 @@ class PipelineSpec extends SparkSpec {
     val admitted = incoming.filter(col("doc_id").isin(admittedIds: _*))
     val rescreen = Dedup.ingestIncrement(
         fps, hx, bx, admitted, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+        shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
       .as[(Long, String)].collect()
     assert(rescreen.forall(_._2 == "admitted"), rescreen.mkString(","))
     // (c) no admit near-dups the eval benchmark at the decon threshold
@@ -220,8 +218,7 @@ class PipelineSpec extends SparkSpec {
     val incoming = incomingDocs.toDF("doc_id", "text")
     val (fps, hx, bx) = artifacts(corpusDf)
     val got = TrainingPipeline
-      .dailyAdmissionHard13(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
-        portableHash = true)
+      .dailyAdmissionHard13(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"))
       .as[(Long, String)].collect()
     // (a) exactly one verdict per incoming doc, from the declared ladder
     assert(got.map(_._1).sorted.toSeq == incomingDocs.map(_._1).sorted)
@@ -236,8 +233,7 @@ class PipelineSpec extends SparkSpec {
     // ...and sails through the Jaccard ladder — the two rules measure
     // different leakage, which is why both are declared
     val jaccard = TrainingPipeline
-      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"),
-        portableHash = true)
+      .dailyAdmission(fps, hx, bx, incoming, evalDf, col("doc_id"), col("text"))
       .as[(Long, String)].collect().toMap
     assert(jaccard(6040L) == "admitted",
       s"span doc should clear the 0.5-Jaccard decon, got ${jaccard(6040L)}")
@@ -246,16 +242,16 @@ class PipelineSpec extends SparkSpec {
     assert(admittedIds.nonEmpty)
     val admitted = incoming.filter(col("doc_id").isin(admittedIds: _*))
     assert(Dedup.exactNgramCollisions(
-      admitted, evalDf, col("doc_id"), col("text"), 13, portableHash = true).isEmpty)
+      admitted, evalDf, col("doc_id"), col("text"), 13).isEmpty)
     // (d) the bloom-pruned 13-gram screen finds exactly the plain
     // screen's collisions on the same batch (the span leak among them)
     def hits(df: DataFrame) = df.as[(Long, Long)].collect().toSet
     val plain = hits(Dedup.exactNgramCollisions(
-      incoming, evalDf, col("doc_id"), col("text"), 13, portableHash = true))
+      incoming, evalDf, col("doc_id"), col("text"), 13))
     assert(plain.exists(_._1 == 6040L), plain.mkString(","))
     assert(hits(Dedup.exactNgramCollisionsBloom(
       incoming, evalDf, col("doc_id"), col("text"), 13,
-      expectedEvalShingles = 1000L, portableHash = true)) == plain)
+      expectedEvalShingles = 1000L)) == plain)
   }
 
   test("zorder2 matches the per-bit reference and nulls out-of-range input") {

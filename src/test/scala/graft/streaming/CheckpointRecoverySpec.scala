@@ -197,9 +197,9 @@ class CheckpointRecoverySpec extends SparkSpec {
       val dir = "/root/testdata/sf0.001"
       val sigs = graft.ops.Dedup.minhashSignatures(
         Tables(spark, dir).documents, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, portableHash = true)
-      def bandKey(j: Int) = concat_ws("|", lit(j),
-        md5(concat_ws("|", (4 * j until 4 * j + 4).map(i => col(s"m$i").cast("string")): _*)))
+        shingleLen = 3, k = 64)
+      def bandKey(j: Int) =
+        concat_ws("|", lit(j), graft.ops.Dedup.bandHash(i => col(s"m$i"), j, 4))
       val events = sigs.select(
           col("doc_id"),
           explode(array((0 until 16).map(bandKey): _*)).as("key"),

@@ -95,7 +95,7 @@ class IngestGateSpec extends SparkSpec {
       .as[(Long, Array[Long])].collect().map(r => r._1 -> r._2.toSeq).toMap
     val batch = graft.ops.Dedup
       .minhashSignatures(docs, col("doc_id"), col("text"),
-        shingleLen = 3, k = 64, portableHash = true)
+        shingleLen = 3, k = 64)
       .select(col("doc_id"), array((0 until 64).map(i => col(s"m$i")): _*).as("sig"))
       .as[(Long, Array[Long])].collect().map(r => r._1 -> r._2.toSeq).toMap
     assert(batch.nonEmpty && hof == batch,

@@ -19,9 +19,8 @@ class StreamingDedupSpec extends SparkSpec {
   private def bandedEvents(dir: String) = {
     val sigs = Dedup.minhashSignatures(
       graft.io.Tables(spark, dir).documents, col("doc_id"), col("text"),
-      shingleLen = 3, k = 64, portableHash = true)
-    def bandKey(j: Int) = concat_ws("|", lit(j),
-      md5(concat_ws("|", (4 * j until 4 * j + 4).map(i => col(s"m$i").cast("string")): _*)))
+      shingleLen = 3, k = 64)
+    def bandKey(j: Int) = concat_ws("|", lit(j), Dedup.bandHash(i => col(s"m$i"), j, 4))
     sigs.select(
       col("doc_id"),
       explode(array((0 until 16).map(bandKey): _*)).as("key"),
@@ -46,7 +45,7 @@ class StreamingDedupSpec extends SparkSpec {
       val streamPairs = stream.map { case (_, a, b, _) => (a, b) }.toSet
       val exact = Dedup.minhashDedup(
           graft.io.Tables(spark, dir).documents, col("doc_id"), col("text"),
-          shingleLen = 3, k = 64, bands = 16, threshold = 0.6, portableHash = true)
+          shingleLen = 3, k = 64, bands = 16, threshold = 0.6)
         .select(col("a").cast("long"), col("b").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(streamPairs.nonEmpty && exact.nonEmpty, "vacuous fixture")
@@ -116,7 +115,7 @@ class StreamingDedupSpec extends SparkSpec {
       .distinct().as[(Long, Long)].collect().toSet
     val batch = Dedup.exactNgramCollisions(
         docs.filter(col("doc_id") % 2 === 1), docs.filter(col("doc_id") % 2 === 0),
-        col("doc_id"), col("text"), n = 13, portableHash = true)
+        col("doc_id"), col("text"), n = 13)
       .as[(Long, Long)].collect().toSet
     assert(batch.nonEmpty)
     assert(run(0) == batch)
@@ -170,7 +169,7 @@ class StreamingDedupSpec extends SparkSpec {
 
       // ttl >> horizon: entry survives, the pair must appear
       val longTtl = run("ttl_long",
-        org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofHours(1))) { (in, q) =>
+        org.apache.spark.sql.streaming.TTLConfig(java.time.Duration.ofHours(1))) { (in, _) =>
         in.addData(Seq(ev("a", 0L), ev("b", 1L)))
         assert(await() { hits.contains(("ttl_long", "a", "b")) },
           "pair never emitted under a 1h ttl")

@@ -44,7 +44,7 @@ class WindowTriggersSpec extends SparkSpec {
           ev("u1", "2020-01-01 00:00:20", "pv", "b"),
           ev("u1", "2020-01-01 00:00:30", "pv", "a")), // dup id: fires, count unchanged
         Seq(ev("u1", "2020-01-01 00:01:10", "pv", "c"))), // next window restarts
-      "wt_pane")(WindowTriggers.fireAndPurgeCount(_, "pv", 60L, distinctOnId = true))
+      "wt_pane")(WindowTriggers.fireAndPurgeCount(_, "pv", 60L))
     assert(out.map(r => (r.window_start, r.cnt, r.fire_ts)) == Seq(
       (ts("2020-01-01 00:00:00"), 1L, ts("2020-01-01 00:00:10")),
       (ts("2020-01-01 00:00:00"), 2L, ts("2020-01-01 00:00:20")),
@@ -58,7 +58,7 @@ class WindowTriggersSpec extends SparkSpec {
     } yield ev(k, f"2020-01-01 00:0$m%01d:05", "pv", s"id${m % 3}"))
       .sortBy(e => (e.ts.getTime, e.key)) // time-ordered: batches respect the global watermark
     val out = runScenario(Seq(events.take(8), events.drop(8)), "wt_equiv")(
-      WindowTriggers.fireAndPurgeCount(_, "pv", 120L, distinctOnId = true))
+      WindowTriggers.fireAndPurgeCount(_, "pv", 120L))
     val finals = out.groupBy(r => (r.key, r.window_start))
       .map { case (k, rs) => (k, rs.map(_.cnt).max) }
     val batch = events.toDF()
